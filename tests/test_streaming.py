@@ -38,14 +38,14 @@ def _rows(df, *order):
     return [tuple(r) for r in df.orderBy(*order).collect()]
 
 
-def test_tumbling_parity(spark, event_dir, tmp_path):
+def test_tumbling_parity(spark, event_dir):
     aggs = [F.count("*").alias("n"), F.round(F.sum("value"), 6).alias("sum_v")]
     batch = tumbling_agg(spark.read.parquet(event_dir), "ts", "1 hour",
                          aggs, keys=["event_type"])
     stream = tumbling_agg(read_event_stream(spark, event_dir), "ts",
                           "1 hour", aggs, keys=["event_type"],
                           watermark="30 minutes")
-    got = run_available_now(stream, "t_tumbling", str(tmp_path / "ckpt"))
+    got = run_available_now(stream)
     order = ["window_start", "event_type"]
     assert _rows(got, *order) == _rows(batch, *order)
     assert got.count() > 0
@@ -57,14 +57,14 @@ def test_tumbling_requires_watermark(spark, event_dir):
                      [F.count("*").alias("n")])
 
 
-def test_sliding_parity(spark, event_dir, tmp_path):
+def test_sliding_parity(spark, event_dir):
     aggs = [F.count("*").alias("n")]
     batch = sliding_agg(spark.read.parquet(event_dir), "ts",
                         "2 hours", "1 hour", aggs, keys=["user_id"])
     stream = sliding_agg(read_event_stream(spark, event_dir), "ts",
                          "2 hours", "1 hour", aggs, keys=["user_id"],
                          watermark="1 hour")
-    got = run_available_now(stream, "t_sliding", str(tmp_path / "ckpt"))
+    got = run_available_now(stream)
     order = ["window_start", "user_id"]
     assert _rows(got, *order) == _rows(batch, *order)
     # every event lands in duration/slide = 2 windows
@@ -72,7 +72,7 @@ def test_sliding_parity(spark, event_dir, tmp_path):
     assert got.agg(F.sum("n")).collect()[0][0] == 2 * n_events
 
 
-def test_session_windows(spark, event_dir, tmp_path):
+def test_session_windows(spark, event_dir):
     aggs = [F.count("*").alias("n_events")]
     batch = session_agg(spark.read.parquet(event_dir), "ts", "30 minutes",
                         ["user_id"], aggs)
@@ -82,7 +82,7 @@ def test_session_windows(spark, event_dir, tmp_path):
     stream = session_agg(read_event_stream(spark, event_dir), "ts",
                          "30 minutes", ["user_id"], aggs,
                          watermark="60 days")
-    got = run_available_now(stream, "t_session", str(tmp_path / "ckpt"))
+    got = run_available_now(stream)
     order = ["session_start", "user_id"]
     assert _rows(got, *order) == _rows(batch, *order)
     # sessions never overlap per user and each holds >= 1 event
@@ -128,7 +128,7 @@ def test_session_append_emits_watermark_closed_only(spark, tmp_path):
     got = run_available_now(
         session_agg(read_event_stream(spark, str(d)), "ts", "10 minutes",
                     ["user_id"], aggs, watermark="5 minutes"),
-        "t_sess_append", str(tmp_path / "ckpt"), output_mode="append")
+        output_mode="append")
     batch = session_agg(spark.read.parquet(str(d)), "ts", "10 minutes",
                         ["user_id"], aggs)
     final_wm = ts(12, 25)  # 12:30 max event time - 5 min delay
@@ -162,7 +162,7 @@ def test_stream_file_plan_two_batch_invariant(tmp_path):
         assert _stream_file_plan(src) == (4, 2)
 
 
-def test_append_mode_emits_closed_windows_only(spark, event_dir, tmp_path):
+def test_append_mode_emits_closed_windows_only(spark, event_dir):
     """Append mode emits a window only after the watermark passes its
     end, and events arriving after that are dropped as late. So every
     emitted window exists in the batch result and its count is <= the
@@ -174,8 +174,7 @@ def test_append_mode_emits_closed_windows_only(spark, event_dir, tmp_path):
     stream = tumbling_agg(read_event_stream(spark, event_dir), "ts",
                           "1 hour", aggs, keys=["event_type"],
                           watermark="10 minutes")
-    got = run_available_now(stream, "t_append", str(tmp_path / "ckpt"),
-                            output_mode="append")
+    got = run_available_now(stream, output_mode="append")
     batch_map = {(r["window_start"], r["event_type"]): r["n"]
                  for r in batch.collect()}
     emitted = got.collect()
@@ -202,15 +201,14 @@ def doc_dir(spark, tmp_path_factory):
     return str(d / "docs")
 
 
-def test_streaming_dedup_first_seen_wins(spark, doc_dir, tmp_path):
+def test_streaming_dedup_first_seen_wins(spark, doc_dir):
     from rivulus_spark.streaming import streaming_dedup
 
     stream = (spark.readStream
               .schema(spark.read.parquet(doc_dir).schema)
               .option("maxFilesPerTrigger", 1)
               .parquet(doc_dir))
-    got = run_available_now(streaming_dedup(stream), "t_dedup",
-                            str(tmp_path / "ckpt"), output_mode="append")
+    got = run_available_now(streaming_dedup(stream), output_mode="append")
     batch = spark.read.parquet(doc_dir)
     # one output row per distinct fingerprint
     assert got.count() == batch.select("fp").distinct().count()
@@ -253,15 +251,14 @@ def test_watermark_dedup_matches_batch_distinct(spark, tmp_path):
     got = run_available_now(
         watermark_dedup(stream, ["user_id", "event_type", "hour"],
                         ts_col="ts", watermark="2 hours"),
-        "t_wm_dedup", str(tmp_path / "ckpt"), output_mode="append")
+        output_mode="append")
     batch = (_wm_keyed(spark.read.parquet(d))
              .select("user_id", "event_type", "hour").distinct())
     order = ["user_id", "event_type", "hour"]
     assert (_rows(got.select(*order), *order) == _rows(batch, *order))
 
 
-def test_watermark_dedup_unordered_replay_drops_late(spark, event_dir,
-                                                     tmp_path):
+def test_watermark_dedup_unordered_replay_drops_late(spark, event_dir):
     """The documented engine trade the workload query's time-ordered
     staging exists to avoid: with round-robin (unordered) files every
     micro-batch spans the full time range, so once the watermark
@@ -273,19 +270,18 @@ def test_watermark_dedup_unordered_replay_drops_late(spark, event_dir,
     got = run_available_now(
         watermark_dedup(stream, ["user_id", "event_type", "hour"],
                         ts_col="ts", watermark="2 hours"),
-        "t_wm_dedup_uo", str(tmp_path / "ckpt"), output_mode="append")
+        output_mode="append")
     n_distinct = (_wm_keyed(spark.read.parquet(event_dir))
                   .select("user_id", "event_type", "hour")
                   .distinct().count())
     assert got.count() < n_distinct
 
 
-def test_running_totals_final_state_matches_batch(spark, event_dir, tmp_path):
+def test_running_totals_final_state_matches_batch(spark, event_dir):
     from rivulus_spark.streaming import running_totals
 
     stream = read_event_stream(spark, event_dir)
     got = run_available_now(running_totals(stream, "user_id", "value"),
-                            "t_running", str(tmp_path / "ckpt"),
                             output_mode="update")
     # memory sink in update mode appends every emission; the LAST
     # emission per key is the final cumulative state
@@ -302,7 +298,7 @@ def test_running_totals_final_state_matches_batch(spark, event_dir, tmp_path):
         assert abs(f[k][1] - b[k][1]) < 1e-6
 
 
-def test_enrich_stream_static_join_parity(spark, event_dir, tmp_path):
+def test_enrich_stream_static_join_parity(spark, event_dir):
     """Stream-static enrichment must equal the same join run in batch,
     across micro-batches (dim re-read per batch, no streaming state)."""
     from rivulus_spark.streaming import enrich_stream
@@ -322,8 +318,7 @@ def test_enrich_stream_static_join_parity(spark, event_dir, tmp_path):
     agg = (stream.groupBy("cohort")
            .agg(F.count("*").alias("n"),
                 F.round(F.sum("value"), 2).alias("sv")))
-    got_stream = run_available_now(agg, "enrich_parity",
-                                   str(tmp_path / "ckpt"))
+    got_stream = run_available_now(agg)
     assert _rows(got_batch, "cohort") == _rows(got_stream, "cohort")
 
 
@@ -337,7 +332,7 @@ def test_interval_join_requires_watermarks(spark, tmp_path):
                       right_time="ts", lower="-1 hours", upper="0 seconds")
 
 
-def test_interval_join_stream_matches_batch(spark, tmp_path):
+def test_interval_join_stream_matches_batch(spark):
     from rivulus_spark.streaming import (
         interval_join, load_events, read_event_stream, run_available_now,
     )
@@ -358,8 +353,7 @@ def test_interval_join_stream_matches_batch(spark, tmp_path):
         spark, "/root/testdata/sf0.001/events.parquet"))
     j = interval_join(sp, sv, left_watermark="2 hours",
                       right_watermark="2 hours", **kw)
-    got = run_available_now(j, "t_interval_join", str(tmp_path / "ckpt"),
-                            output_mode="append")
+    got = run_available_now(j, output_mode="append")
     stream = {(r.event_id, r.user_id, r.value_r) for r in got.collect()}
     assert stream == batch and len(batch) > 0
 
@@ -433,14 +427,78 @@ def test_stream_decontaminate_matches_batch_report(spark, tmp_path):
               .option("maxFilesPerTrigger", 1)
               .parquet(str(d)))
     suspects = contamination.stream_bloom_suspects(stream, bf, k=3)
-    drained = run_available_now(suspects, "t_stream_decon",
-                                str(tmp_path / "ckpt"),
-                                output_mode="append")
+    drained = run_available_now(suspects, output_mode="append")
     got = sorted(map(tuple, contamination.report_from_suspects(
         drained, ev).collect()))
     want = sorted(map(tuple, contamination.contamination_report(
         train, ev_docs, k=3).collect()))
     assert got == want and len(got) > 0
+
+
+def test_drains_leave_no_tables_checkpoints_or_conf(spark, tmp_path):
+    """A drain owns its query name, checkpoint and state partitions:
+    afterwards the catalog has no memory-sink view, no checkpoint dir
+    remains under the temp dir, shuffle.partitions reads its prior
+    value, and the returned frame still holds the drained rows. A
+    failed drain leaves nothing behind either."""
+    import os
+    import tempfile
+
+    from pyspark.errors import StreamingQueryException
+
+    from rivulus_spark.streaming.windows import (
+        run_available_now_foreach_batch,
+    )
+
+    src = str(tmp_path / "src")
+    spark.range(0, 30).repartition(3).write.parquet(src)
+
+    def stream():
+        return (spark.readStream.schema("id long")
+                .option("maxFilesPerTrigger", 1).parquet(src)
+                .select((F.col("id") % 3).alias("k")))
+
+    def counts(df):
+        return df.groupBy("k").agg(F.count("*").alias("n"))
+
+    def ours():
+        return {d for d in os.listdir(tempfile.gettempdir())
+                if d.startswith("rivulus_")}
+
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    n_parts = 3 if prev != "3" else 5
+    tables0 = {t.name for t in spark.catalog.listTables()}
+    dirs0 = ours()
+
+    got = run_available_now(counts(stream()), state_partitions=n_parts)
+    partials = run_available_now_foreach_batch(stream(), counts)
+
+    assert {t.name for t in spark.catalog.listTables()} == tables0
+    assert ours() == dirs0
+    assert spark.conf.get(key) == prev
+    want = [(0, 10), (1, 10), (2, 10)]
+    assert _rows(got, "k") == want
+    assert _rows(partials.groupBy("k").agg(F.sum("n").alias("n")),
+                 "k") == want
+
+    calls = []
+
+    def fail_after_probe(df):
+        calls.append(1)
+        if len(calls) > 1:
+            raise RuntimeError("batch failed")
+        return df
+
+    with pytest.raises(StreamingQueryException):
+        run_available_now_foreach_batch(stream(), fail_after_probe)
+    with pytest.raises(StreamingQueryException):
+        run_available_now(
+            counts(stream().filter(F.assert_true(F.col("k") < 0).isNull())),
+            state_partitions=n_parts)
+    assert {t.name for t in spark.catalog.listTables()} == tables0
+    assert ours() == dirs0
+    assert spark.conf.get(key) == prev
 
 
 def test_stream_weighted_sample_equals_batch(spark):
