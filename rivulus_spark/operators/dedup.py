@@ -69,12 +69,6 @@ def shingles(col: str | Column, k: int = 3) -> Column:
         F.array().cast("array<string>"))
 
 
-def shingle_hashes(col: str | Column, k: int = 3) -> Column:
-    """Distinct k-gram shingle hashes reduced mod P (ready for MinHash)."""
-    return F.array_distinct(
-        F.transform(shingles(col, k), lambda s: word_hash(s) % MINHASH_P))
-
-
 def shingle_rows(df: DataFrame, text_col: str = "text",
                  id_col: str = "doc_id", k: int = 3) -> DataFrame:
     """Distinct (id, s) k-gram shingle rows over the shared positional
@@ -539,8 +533,8 @@ def adaptive_minhash_bands(n_docs: int, num_perm: int = NUM_PERM,
     most bands the ``num_perm`` slot budget affords, maximizing
     recall at the wider rows.
 
-    Two measured effects at the third decade (r8 probe,
-    tools/probe_minhash_bands.py over var/sf10, 500k docs):
+    Two measured effects at the third decade (r8 design measurement
+    over an sf10 corpus, 500k docs):
 
     - The banding self-join's exploded volume is bands x n rows; the
       schedule's 32 -> 25 bands at sf10 cut the band stage 8.7 ->
@@ -2062,7 +2056,7 @@ def editdist_neardup_pairs_blocked(df: DataFrame, max_dist: int = 8,
     :func:`editdist_neardup_pairs` — identical contract and output
     (dist >= |len diff| makes the blocking answer-preserving), but
     candidates are ALL block-mate pairs, i.e. Σ block² — measured
-    ×100 candidates on ×10 docs (SCALE_CURVE `editdist_neardup_r9`).
+    ×100 candidates on ×10 docs (~140k pairs at sf0.1, 14.2M at sf1).
     Kept as the simple, shuffle-light choice for corpora whose
     per-length-block counts are KNOWN small (and as the independent
     cross-check the PassJoin test suite compares against); the

@@ -14,10 +14,6 @@ Scale design:
   ``PushedFilters``). Partition by LOW-cardinality routing columns
   (date, language, source); high-cardinality partitioning creates
   millions of tiny files and kills the driver's listing phase.
-- **File sizing**: writers emit one file per task per partition-value;
-  ``coalesce_files`` caps the task count for small dimension outputs so
-  a 25-row result is not 32 files. Do NOT coalesce large outputs — one
-  file per task IS the parallelism.
 - The CSV/JSONL sinks mirror the read formats in csv.py / jsonl.py
   (header + explicit null token round-trips the CSV parsing contract).
 """
@@ -29,11 +25,8 @@ from pyspark.sql import DataFrame, SparkSession
 
 def write_parquet(df: DataFrame, path: str,
                   partition_by: list[str] | None = None,
-                  mode: str = "overwrite",
-                  coalesce_files: int | None = None) -> None:
+                  mode: str = "overwrite") -> None:
     """Write parquet, optionally hive-partitioned by ``partition_by``."""
-    if coalesce_files is not None:
-        df = df.coalesce(coalesce_files)
     w = df.write.mode(mode)
     if partition_by:
         w = w.partitionBy(*partition_by)
@@ -57,14 +50,11 @@ def read_parquet(spark: SparkSession, path: str,
 
 
 def write_csv(df: DataFrame, path: str, mode: str = "overwrite",
-              coalesce_files: int | None = None,
               delimiter: str = ",", header: bool = True) -> None:
     """CSV sink matching the engine's CSV source contract (header row,
     ``null`` as the null token). The SINGLE place that contract is
     encoded — LazyFrame.write_csv delegates here, like from_csv
     delegates to sources.csv."""
-    if coalesce_files is not None:
-        df = df.coalesce(coalesce_files)
     (df.write.mode(mode)
      .option("sep", delimiter)
      .option("header", header).option("nullValue", "null")
@@ -73,21 +63,15 @@ def write_csv(df: DataFrame, path: str, mode: str = "overwrite",
 
 def write_orc(df: DataFrame, path: str,
               partition_by: list[str] | None = None,
-              mode: str = "overwrite",
-              coalesce_files: int | None = None) -> None:
+              mode: str = "overwrite") -> None:
     """ORC sink; same hive-partitioning semantics as write_parquet."""
-    if coalesce_files is not None:
-        df = df.coalesce(coalesce_files)
     w = df.write.mode(mode)
     if partition_by:
         w = w.partitionBy(*partition_by)
     w.orc(path)
 
 
-def write_jsonl(df: DataFrame, path: str, mode: str = "overwrite",
-                coalesce_files: int | None = None) -> None:
+def write_jsonl(df: DataFrame, path: str, mode: str = "overwrite") -> None:
     """JSON-lines sink (one JSON object per row), the interchange
     format of most LLM-corpus tooling."""
-    if coalesce_files is not None:
-        df = df.coalesce(coalesce_files)
     df.write.mode(mode).json(path)

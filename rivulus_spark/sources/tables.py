@@ -16,10 +16,6 @@ TABLES = [
     "orders", "lineitem", "events", "documents", "embeddings",
 ]
 
-# dimension tables small enough to broadcast at any realistic scale
-BROADCAST_TABLES = {"region", "nation"}
-
-
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 

@@ -2,9 +2,10 @@
 
 The reference is API-only — it has no SQL parser or string entry point
 anywhere (SURVEY §2.6). This module is north-star superset surface:
-register the engine's tables as temp views and hand query strings to
-Spark SQL, so every fluent-API query has a SQL spelling and vice versa
-(both build the same Catalyst logical plan and optimize identically).
+hand query strings to Spark SQL over views registered with
+``sources.tables.register_views``, so every fluent-API query has a SQL
+spelling and vice versa (both build the same Catalyst logical plan and
+optimize identically).
 """
 
 from __future__ import annotations
@@ -12,20 +13,6 @@ from __future__ import annotations
 from pyspark.sql import SparkSession
 
 from .frame import LazyFrame
-
-#: the driver testdata star schema (TESTDATA.md)
-DEFAULT_TABLES = ["region", "nation", "customer", "supplier", "part",
-                  "orders", "lineitem", "documents", "embeddings"]
-
-
-def register_tables(spark: SparkSession, sf_dir: str,
-                    tables: list[str] | None = None) -> None:
-    """Register each parquet table under ``sf_dir`` as a temp view named
-    after the table. Views are metadata-only: no read happens until a
-    query runs, and per-query filters still push down into each scan."""
-    for t in tables or DEFAULT_TABLES:
-        (spark.read.parquet(f"{sf_dir}/{t}.parquet")
-         .createOrReplaceTempView(t))
 
 
 def sql(spark: SparkSession, query: str) -> LazyFrame:

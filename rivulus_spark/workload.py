@@ -1209,8 +1209,9 @@ def q_sql_entry_q6(spark, sf_dir):
     reference is API-only; rivulus_spark.sql adds the SQL surface).
     Scan-only plan: every predicate pushes into the parquet scan."""
     from . import sql as rsql
+    from .sources.tables import register_views
 
-    rsql.register_tables(spark, sf_dir, ["lineitem"])
+    register_views(spark, sf_dir, ["lineitem"])
     return rsql.sql(spark, """
         SELECT round(sum(l_extendedprice * l_discount), 2) AS revenue
         FROM lineitem

@@ -273,7 +273,7 @@ def test_window_ntile_has_no_unpartitioned_data_window(spark):
     # the bench heavy tail: every banded/bucketed candidate path must
     # stay an equi-join — a regression to all-pairs shows up as a
     # nested-loop or cartesian stage (VERDICT r2 next-round #6);
-    # covers every batch query >2s in BENCH_DETAIL at sf0.1
+    # covers every batch query that took >2s at sf0.1
     "dedup_minhash_lsh", "dedup_minhash_estimate", "dedup_incremental",
     "embedding_neardup_lsh", "decontaminate_fuzzy",
     "pipeline_curate", "pipeline_curate_v2", "pipeline_stats",

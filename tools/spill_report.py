@@ -3,8 +3,7 @@
 r11 #7): run each query to completion with the noop sink (bench.py's
 execution contract) and record memory/disk spill plus peak execution
 memory from Spark's own stage metrics, so a spill regression is
-visible from a committed artifact (bench.py folds SPILL_r12.json into
-BENCH_DETAIL.json).
+visible from a committed artifact (SPILL_r12.json).
 
 This is a dedicated tool rather than per-rep bench telemetry because
 reading the stage metrics costs a REST/status-store crawl per query
@@ -35,7 +34,7 @@ import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-# the heaviest non-streaming rows of the r11 driver bench (BENCH_r11
+# the heaviest non-streaming rows of the r11 driver bench (its
 # top-15 minus stream_* whose cost is the micro-batch state store, not
 # shuffle spill) — the set VERDICT r11 #7 asks to watch at sf1/sf10
 DEFAULT_QUERIES = [
