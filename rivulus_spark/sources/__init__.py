@@ -1,8 +1,7 @@
 from . import bucketed, shards, sink
 from .csv import read_csv
 from .jsonl import read_jsonl
-from .tables import load_table, load_tables, register_views
+from .tables import load_table, register_views
 
 __all__ = ["bucketed", "shards", "sink",
-           "read_csv", "read_jsonl", "load_table", "load_tables",
-           "register_views"]
+           "read_csv", "read_jsonl", "load_table", "register_views"]

@@ -22,73 +22,22 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    DoubleType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
 
-EVENT_SCHEMA = StructType([
-    StructField("event_id", LongType()),
-    StructField("ts", LongType()),  # legacy TIMESTAMP(NANOS) layout read as long
-    StructField("user_id", LongType()),
-    StructField("event_type", StringType()),
-    StructField("value", DoubleType()),
-    StructField("props", StringType()),
-])
-
-
-def _nanos_to_ts(df: DataFrame) -> DataFrame:
-    """The testdata's events.parquet stores ts as TIMESTAMP(NANOS);
-    rebuild a microsecond timestamp with integer division (double
-    division loses precision above 2^53 ns)."""
-    return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+from ..sources.tables import EVENTS_SCHEMA
 
 
 def load_events(spark: SparkSession, path: str) -> DataFrame:
-    """Batch read of an events parquet path (nanos-ts aware; a native
-    TIMESTAMP(MICROS) ts is passed through untouched)."""
-    _events_read_confs(spark)
-    df = spark.read.parquet(path)
-    if isinstance(df.schema["ts"].dataType, LongType):
-        df = _nanos_to_ts(df)
-    return df
+    """Batch read of an events parquet path, typed by ``EVENTS_SCHEMA``."""
+    return spark.read.schema(EVENTS_SCHEMA).parquet(path)
 
 
-def _events_read_confs(spark: SparkSession) -> None:
-    """Read confs for the two ts layouts events.parquet has shipped
-    with: TIMESTAMP(NANOS) (unsupported by the vectorized reader —
-    read the raw nanos as long) and TIMESTAMP(MICROS) with
-    isAdjustedToUTC=false (read as tz-aware TIMESTAMP, not
-    TIMESTAMP_NTZ — watermarks reject NTZ event time).
-
-    Deliberately SESSION-scoped and not restored: a streaming query
-    re-resolves read confs each micro-batch, so save/restore around
-    the readStream declaration would flip the schema mid-stream.
-    Side effect on the session: later parquet reads see NANOS columns
-    as long and NTZ inference off. Callers that need the Spark
-    defaults for unrelated reads should use a separate SparkSession
-    (cheap: SparkSession.newSession() shares the context)."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-
-
-def read_event_stream(spark: SparkSession, path: str,
-                      max_files_per_trigger: int = 1,
-                      schema: StructType | None = None) -> DataFrame:
-    """File-based event stream: each parquet file in ``path`` becomes
-    (at most ``max_files_per_trigger`` per) micro-batch. Streaming
-    sources never infer, so the schema is discovered with a one-time
-    batch footer read when not supplied. A nanos-long ``ts`` (the raw
-    testdata layout) is converted to a real timestamp."""
+def read_event_stream(spark: SparkSession, path: str) -> DataFrame:
+    """File-based event stream typed by ``EVENTS_SCHEMA``: each parquet
+    file in ``path`` (a directory, or a single file) becomes one
+    micro-batch."""
     import hashlib
     import os
 
-    _events_read_confs(spark)
-    if schema is None:
-        schema = spark.read.parquet(path).schema
     if os.path.isfile(path):
         # the file-stream source lists a DIRECTORY for new files; a
         # single-file input (the testdata layout) is staged as a
@@ -116,12 +65,9 @@ def read_event_stream(spark: SparkSession, path: str,
                 # the identical link, so losing the race is fine
                 pass
         path = d
-    reader = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", max_files_per_trigger))
-    df = reader.parquet(path)
-    if isinstance(df.schema["ts"].dataType, LongType):
-        df = _nanos_to_ts(df)
-    return df
+    return (spark.readStream.schema(EVENTS_SCHEMA)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(path))
 
 
 def _require_watermark(df: DataFrame, time_col: str, watermark: str | None) -> DataFrame:

@@ -20,6 +20,7 @@ escape hatches (group_by/agg, windows) or the operator modules.
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -28,6 +29,7 @@ from pyspark.sql import functions as F
 from .expressions import col, lit
 from .frame import LazyFrame
 from .operators import dedup, multimodal, similarity, text as text_ops
+from .sources.tables import load_table as _t
 from .streaming import windows as sw
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
@@ -45,13 +47,18 @@ DRIVER_SF_DIR = "/root/testdata/sf0.01"
 
 def _q(name: str, oracle: str | Callable[[str], str] | None = None):
     def deco(fn: QueryFn) -> QueryFn:
-        QUERIES[name] = fn
+        @functools.wraps(fn)
+        def query(spark: SparkSession, sf_dir: str) -> DataFrame:
+            _prep(spark)
+            return fn(spark, sf_dir)
+
+        QUERIES[name] = query
         if callable(oracle):
             ORACLE_BUILDERS[name] = oracle
             ORACLE[name] = oracle(DRIVER_SF_DIR)
         elif oracle is not None:
             ORACLE[name] = oracle
-        return fn
+        return query
     return deco
 
 
@@ -65,24 +72,14 @@ def oracle_sql_for(name: str, sf_dir: str) -> str | None:
 
 
 def _prep(spark: SparkSession) -> None:
-    """Session confs the workload depends on, set at runtime so they
-    hold in any caller's session (the driver uses its own)."""
+    """Session confs the workload depends on, set by every registered
+    query so they hold in any caller's session (the driver uses its
+    own)."""
     spark.conf.set("spark.sql.session.timeZone", "UTC")
 
 
 def _lf(spark: SparkSession, sf_dir: str, table: str) -> LazyFrame:
-    _prep(spark)
     return LazyFrame.from_parquet(spark, f"{sf_dir}/{table}.parquet")
-
-
-def _t(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
-    _prep(spark)
-    return spark.read.parquet(f"{sf_dir}/{table}.parquet")
-
-
-def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _prep(spark)
-    return sw.load_events(spark, f"{sf_dir}/events.parquet")
 
 
 # ======================================================================
@@ -590,7 +587,7 @@ def q_range_join_events(spark, sf_dir):
     Spark's native plan for this predicate is a per-key nested loop."""
     from .operators import asof
 
-    ev = _events(spark, sf_dir)
+    ev = _t(spark, sf_dir, "events")
     p = (ev.filter(F.col("event_type") == "purchase")
          .select("event_id", "user_id", F.unix_micros("ts").alias("tsu")))
     v = (ev.filter(F.col("event_type") == "view")
@@ -700,7 +697,7 @@ FROM events
 def q_window_lag(spark, sf_dir):
     """Per-user inter-event gap in microseconds (lag window)."""
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    return (_events(spark, sf_dir)
+    return (_t(spark, sf_dir, "events")
             .select("event_id", "user_id",
                     (F.unix_micros(F.col("ts"))
                      - F.unix_micros(F.lag("ts").over(w))).alias("gap_us")))
@@ -768,7 +765,7 @@ def q_events_sliding(spark, sf_dir):
     advancing every 15 minutes — each event lands in exactly 4
     windows (epoch-aligned, the oracle enumerates the 4 offsets
     relationally)."""
-    ev = _events(spark, sf_dir)
+    ev = _t(spark, sf_dir, "events")
     out = sw.sliding_agg(ev, "ts", "1 hour", "15 minutes",
                          aggs=[F.count("*").alias("n_events")],
                          keys=["event_type"])
@@ -799,7 +796,7 @@ def q_events_resample(spark, sf_dir):
     broadcast, so the dense grid never shuffles raw events."""
     from .operators import timeseries
 
-    ev = _events(spark, sf_dir).select("user_id", "ts", "value")
+    ev = _t(spark, sf_dir, "events").select("user_id", "ts", "value")
     out = timeseries.resample_daily(
         ev, "ts", "user_id",
         aggs=[F.count("*").alias("n_events"),
@@ -824,7 +821,7 @@ def q_stream_running_totals(spark, sf_dir):
     update-mode output."""
     from .streaming import stateful
 
-    ev = _events(spark, sf_dir).select("user_id", "value")
+    ev = _t(spark, sf_dir, "events").select("user_id", "value")
     stream = _replay_stream(spark, ev, f"{sf_dir}/events.parquet", "ev")
     out = sw.run_available_now(
         stateful.running_totals(stream, "user_id", "value"),
@@ -844,7 +841,7 @@ FROM events GROUP BY hour, event_type
 def q_events_hourly(spark, sf_dir):
     """Tumbling 1-hour window aggregation over the event stream table —
     the batch analogue of the Structured Streaming windowed agg."""
-    return (_events(spark, sf_dir)
+    return (_t(spark, sf_dir, "events")
             .groupBy(F.date_format(F.date_trunc("hour", F.col("ts")),
                                    "yyyy-MM-dd HH:00").alias("hour"),
                      "event_type")
@@ -883,7 +880,6 @@ def q_stream_sessionize(spark, sf_dir):
     watermark eviction, whose exact emission contract — precisely the
     sessions the final watermark closed — is pinned by
     tests/test_streaming.py::test_session_append_emits_watermark_closed_only."""
-    _prep(spark)
     stream = sw.read_event_stream(spark, f"{sf_dir}/events.parquet")
     sessions = sw.session_agg(
         stream, "ts", "30 minutes", keys=["user_id"],
@@ -910,7 +906,6 @@ def q_stream_events_hourly(spark, sf_dir):
     the streaming engine itself gets an oracle-checked row — at scale
     this identical plan serves the live topic with state-store
     windows + watermark eviction instead of a backfill scan."""
-    _prep(spark)
     stream = sw.read_event_stream(spark, f"{sf_dir}/events.parquet")
     agg = sw.tumbling_agg(
         stream, "ts", "1 hour",
@@ -948,7 +943,6 @@ def q_stream_interval_join(spark, sf_dir):
     contract."""
     from .streaming import joins as sj
 
-    _prep(spark)
     s = sw.read_event_stream(spark, f"{sf_dir}/events.parquet")
     p = (s.filter(F.col("event_type") == "purchase")
          .select("event_id", "user_id", "ts"))
@@ -1019,7 +1013,7 @@ def q_stream_dedup_watermark(spark, sf_dir):
     test_streaming.py."""
     from .streaming import stateful
 
-    ev = (_events(spark, sf_dir)
+    ev = (_t(spark, sf_dir, "events")
           .select("user_id", "event_type", "ts",
                   F.date_format(F.date_trunc("hour", "ts"),
                                 "yyyy-MM-dd HH:00").alias("hour")))
@@ -1055,7 +1049,7 @@ def q_sessionize(spark, sf_dir):
     new_s = F.when(lag_ts.isNull(), 1).when(
         F.unix_micros(F.col("ts")) - F.unix_micros(lag_ts) > 1_800_000_000, 1
     ).otherwise(0)
-    return (_events(spark, sf_dir)
+    return (_t(spark, sf_dir, "events")
             .select("user_id", new_s.alias("new_session"))
             .groupBy("user_id")
             .agg(F.sum("new_session").cast("long").alias("n_sessions")))
@@ -1073,11 +1067,11 @@ def q_asof_join_events(spark, sf_dir):
     """Backward as-of join (operators/asof.py): each purchase picks up
     the value of the user's most recent earlier-or-simultaneous view.
     One key-partitioned sort window — no range cross-join. Times are
-    compared as unix micros on both engines (the parquet holds nanos;
-    micro truncation is applied identically)."""
+    compared as unix micros on both engines, the precision the parquet
+    stores."""
     from .operators import asof
 
-    ev = _events(spark, sf_dir)
+    ev = _t(spark, sf_dir, "events")
     left = (ev.filter(F.col("event_type") == "purchase")
             .select("event_id", "user_id", F.unix_micros("ts").alias("tsu")))
     right = (ev.filter(F.col("event_type") == "view")
@@ -1094,7 +1088,7 @@ FROM events GROUP BY event_type
 def q_events_json(spark, sf_dir):
     """Semi-structured extraction: pull a key out of the JSON props
     column and aggregate (JVM-side JSON path, no UDF)."""
-    return (_events(spark, sf_dir)
+    return (_t(spark, sf_dir, "events")
             .groupBy("event_type")
             .agg(F.sum(F.get_json_object(F.col("props"), "$.k").cast("long"))
                  .alias("sum_k")))
@@ -1964,7 +1958,7 @@ def q_event_rate_anomalies(spark, sf_dir):
     downstream runs on the tiny (type, hour) table."""
     from .operators import stats as stats_ops
 
-    return stats_ops.rate_anomalies(_events(spark, sf_dir))
+    return stats_ops.rate_anomalies(_t(spark, sf_dir, "events"))
 
 
 @_q("source_similarity_matrix", r"""

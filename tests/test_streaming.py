@@ -358,6 +358,28 @@ def test_interval_join_stream_matches_batch(spark):
     assert stream == batch and len(batch) > 0
 
 
+def test_event_reads_leave_session_read_confs_alone(spark):
+    """Events are typed by their schema, not by session state: after a
+    batch and a stream events read, the session's parquet read confs
+    hold their prior values and a tz-naive orders date still reads as
+    TIMESTAMP_NTZ, while both event frames carry a tz-aware ts."""
+    from pyspark.sql.types import TimestampNTZType, TimestampType
+
+    s = spark.newSession()
+    keys = ["spark.sql.parquet.inferTimestampNTZ.enabled",
+            "spark.sql.legacy.parquet.nanosAsLong"]
+    before = {k: s.conf.get(k) for k in keys}
+    batch = load_events(s, EVENTS)
+    stream = read_event_stream(s, EVENTS)
+
+    assert {k: s.conf.get(k) for k in keys} == before
+    orders = s.read.parquet("/root/testdata/sf0.001/orders.parquet")
+    assert isinstance(orders.schema["o_orderdate"].dataType,
+                      TimestampNTZType)
+    assert isinstance(batch.schema["ts"].dataType, TimestampType)
+    assert isinstance(stream.schema["ts"].dataType, TimestampType)
+
+
 def test_file_sink_drain_is_exactly_once_on_resume(spark, tmp_path):
     """run_available_now_to_files: (a) the drained file sink equals
     the batch result; (b) re-draining with the SAME checkpoint and no
