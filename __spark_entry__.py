@@ -17,7 +17,8 @@ from pyspark.sql import DataFrame, SparkSession
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from rivulus_spark.workload import ORACLE, QUERIES  # noqa: E402
+from rivulus_spark.workload import (  # noqa: E402
+    DRIVER_SF_DIR, ORACLE, QUERIES, oracle_sql_for)
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -30,4 +31,4 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
-    return dict(ORACLE)
+    return {n: oracle_sql_for(n, DRIVER_SF_DIR) for n in ORACLE}

@@ -3,7 +3,9 @@ north-star superset) expressed as a named query over the driver's
 TPC-H-ish testdata, each paired with an ANSI-SQL oracle that DuckDB can
 run on the same parquet files.
 
-Conventions (driver contract, __spark_entry__.py):
+Conventions (driver contract, __spark_entry__.py; tests/test_oracle.py
+checks every entry against its oracle, so the order of QUERIES carries
+no meaning):
 - every computed column is aliased identically in the Spark query and
   the oracle SQL (the driver's compare sorts columns by name);
 - float aggregates are rounded (sum order across engines differs at the
@@ -35,13 +37,10 @@ from .streaming import windows as sw
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
 QUERIES: dict[str, QueryFn] = {}
-ORACLE: dict[str, str] = {}
-# Oracles whose SQL depends on the data size (adaptive LSH/ANN params):
-# builders take the sf_dir being compared and regenerate the SQL with
-# the SAME parameter derivation the Spark query performs at call time,
-# so engine and oracle agree at ANY scale, not just the driver's
-# sf0.01 point. ORACLE[] holds the driver-contract build (sf0.01).
-ORACLE_BUILDERS: dict[str, Callable[[str], str]] = {}
+# An oracle is SQL text, or a builder that takes the sf_dir being
+# compared: size-adaptive queries (LSH/ANN parameters) derive their SQL
+# from that directory's row counts, as the Spark query does at call time.
+ORACLE: dict[str, str | Callable[[str], str]] = {}
 DRIVER_SF_DIR = "/root/testdata/sf0.01"
 
 
@@ -53,22 +52,16 @@ def _q(name: str, oracle: str | Callable[[str], str] | None = None):
             return fn(spark, sf_dir)
 
         QUERIES[name] = query
-        if callable(oracle):
-            ORACLE_BUILDERS[name] = oracle
-            ORACLE[name] = oracle(DRIVER_SF_DIR)
-        elif oracle is not None:
+        if oracle is not None:
             ORACLE[name] = oracle
         return query
     return deco
 
 
 def oracle_sql_for(name: str, sf_dir: str) -> str | None:
-    """Oracle SQL for `name` at `sf_dir` — size-adaptive oracles are
-    rebuilt from that directory's row counts (the same derivation the
-    Spark query uses); static oracles are returned as-is."""
-    if name in ORACLE_BUILDERS:
-        return ORACLE_BUILDERS[name](sf_dir)
-    return ORACLE.get(name)
+    """Oracle SQL for `name` at `sf_dir`, or None if it has none."""
+    oracle = ORACLE.get(name)
+    return oracle(sf_dir) if callable(oracle) else oracle
 
 
 def _prep(spark: SparkSession) -> None:
@@ -1441,7 +1434,7 @@ def _bpe_apply_reference(word: str,
     return s
 
 
-def _bpe_train_oracle(sf_dir: str = DRIVER_SF_DIR,
+def _bpe_train_oracle(sf_dir: str,
                       n_merges: int = 8) -> str:
     """Reference merge table as a VALUES literal. The table is exact
     (integer counts, deterministic tie-break), so the driver's
@@ -1456,7 +1449,7 @@ def _bpe_train_oracle(sf_dir: str = DRIVER_SF_DIR,
             "AS t(merge_rank, lhs, rhs, pair_count)")
 
 
-def _bpe_encode_oracle(sf_dir: str = DRIVER_SF_DIR,
+def _bpe_encode_oracle(sf_dir: str,
                        n_merges: int = 8) -> str:
     """Per-document encode counts from the SAME independent reference
     (train with the reference trainer, encode each distinct word with
@@ -1539,7 +1532,7 @@ def q_bpe_encode_corpus(spark, sf_dir):
     return bpe.encode_docs_with_merges(docs, merges, vocab_words=words)
 
 
-def _tokenizer_fertility_oracle(sf_dir: str = DRIVER_SF_DIR) -> str:
+def _tokenizer_fertility_oracle(sf_dir: str) -> str:
     return ("WITH enc AS (" + _bpe_encode_oracle(sf_dir) + """)
 SELECT d.lang, count(*)::BIGINT AS n_docs,
        sum(enc.n_tokens)::BIGINT AS n_tokens,
@@ -1642,7 +1635,7 @@ def _floor6(x: float) -> float:
     return math.floor(x * 1_000_000) / 1_000_000
 
 
-def _clf_weights_oracle(sf_dir: str = DRIVER_SF_DIR) -> str:
+def _clf_weights_oracle(sf_dir: str) -> str:
     w = _clf_reference_fit(sf_dir)[0]
     names = ["intercept"] + _CLF_FEATURES
     values = ",\n".join("('%s', %r)" % (nm, _floor6(wi))
@@ -1651,7 +1644,7 @@ def _clf_weights_oracle(sf_dir: str = DRIVER_SF_DIR) -> str:
             f"FROM (VALUES {values}) AS t(feature, weight)")
 
 
-def _clf_filter_oracle(sf_dir: str = DRIVER_SF_DIR) -> str:
+def _clf_filter_oracle(sf_dir: str) -> str:
     import numpy as np
 
     w, _, _, Xs, _, sources = _clf_reference_fit(sf_dir)
@@ -1999,7 +1992,7 @@ def q_source_similarity_matrix(spark, sf_dir):
                                    group_col="source", k=3)
 
 
-def _pca_oracle(sf_dir: str = DRIVER_SF_DIR, k: int = 16) -> str:
+def _pca_oracle(sf_dir: str, k: int = 16) -> str:
     """Independent numpy reference for the PCA spectrum: embeddings
     read directly from parquet (pyarrow), population covariance and
     eigvalsh computed in one shot — no Spark, no batching, no
@@ -3832,14 +3825,14 @@ def _minhash_pairs_chain(sf_dir: str, threshold: float = 0.8) -> str:
             _doc_rows(sf_dir)))
 
 
-def _minhash_lsh_oracle(sf_dir: str = DRIVER_SF_DIR) -> str:
+def _minhash_lsh_oracle(sf_dir: str) -> str:
     return ("WITH sh AS MATERIALIZED ("
             + _SH_CTE.format(src="documents") + ")"
             + _minhash_pairs_chain(sf_dir)
             + "\nSELECT doc_a, doc_b, jacc FROM pairs")
 
 
-def _decontaminate_fuzzy_oracle(sf_dir: str = DRIVER_SF_DIR) -> str:
+def _decontaminate_fuzzy_oracle(sf_dir: str) -> str:
     return ("WITH sh AS MATERIALIZED ("
             + _SH_CTE.format(src="documents") + ")"
             + _minhash_pairs_chain(sf_dir) + """,
@@ -3879,7 +3872,7 @@ def q_decontaminate_fuzzy(spark, sf_dir):
         band_widths=dedup.adaptive_minhash_bands(_doc_rows(sf_dir)))
 
 
-def _minhash_estimate_oracle(sf_dir: str = DRIVER_SF_DIR,
+def _minhash_estimate_oracle(sf_dir: str,
                              num_perm: int = dedup.NUM_PERM) -> str:
     """Relational replica of dedup.minhash_estimate_audit: banded
     candidates from _minhash_cand_ctes (adaptive widths via the shared
@@ -3949,7 +3942,7 @@ def q_dedup_minhash_lsh(spark, sf_dir):
         band_widths=dedup.adaptive_minhash_bands(_doc_rows(sf_dir)))
 
 
-def _star_clusters_oracle(sf_dir: str = DRIVER_SF_DIR) -> str:
+def _star_clusters_oracle(sf_dir: str) -> str:
     """Banded relational replica of the star-edge LSH chain: band
     rows (bit-identical signatures, same adaptive slices), per-bucket
     MIN, (min, member) star edges, exact-Jaccard verification, then
@@ -4006,7 +3999,7 @@ def q_dedup_star_clusters(spark, sf_dir):
     return dedup.connected_components(edges.select("doc_a", "doc_b"))
 
 
-def _band_occupancy_oracle(sf_dir: str = DRIVER_SF_DIR) -> str:
+def _band_occupancy_oracle(sf_dir: str) -> str:
     widths = dedup.adaptive_minhash_bands(_doc_rows(sf_dir))
     return ("WITH sh AS MATERIALIZED ("
             + _SH_CTE.format(src="documents") + "),"
@@ -4125,7 +4118,7 @@ def q_dedup_incremental_cc(spark, sf_dir):
 _INC_DELTA_SRC = "src7"
 
 
-def _dedup_incremental_oracle(sf_dir: str = DRIVER_SF_DIR,
+def _dedup_incremental_oracle(sf_dir: str,
                               threshold: float = 0.8) -> str:
     """sf-conditional oracle for minhash_lsh_dedup_incremental. Small
     sf: brute-force cross/self all-pairs over the delta — every true
@@ -4293,7 +4286,7 @@ def q_dedup_simhash_pairs(spark, sf_dir):
 # North star: end-to-end corpus curation (operators/pipeline.py)
 # ======================================================================
 
-def _curate_oracle_base(sf_dir: str = DRIVER_SF_DIR) -> str:
+def _curate_oracle_base(sf_dir: str) -> str:
     """Quality -> exact-dedup -> near-dedup losers -> kept CTE chain;
     the near-dup ``pairs`` step is sf-conditional via
     _minhash_pairs_chain (brute-force spec at driver scales, banded
@@ -4322,12 +4315,12 @@ kept AS (
 """)
 
 
-def _pipeline_curate_oracle(sf_dir: str = DRIVER_SF_DIR) -> str:
+def _pipeline_curate_oracle(sf_dir: str) -> str:
     return (_curate_oracle_base(sf_dir)
             + "SELECT doc_id, n_tokens, n_bpe_tokens FROM kept")
 
 
-def _pipeline_stats_oracle(sf_dir: str = DRIVER_SF_DIR) -> str:
+def _pipeline_stats_oracle(sf_dir: str) -> str:
     return _curate_oracle_base(sf_dir) + """
 SELECT count(*) AS n_docs, sum(n_tokens)::BIGINT AS total_tokens,
        sum(n_bpe_tokens)::BIGINT AS total_bpe_tokens,
@@ -4716,7 +4709,7 @@ def q_image_phash(spark, sf_dir):
         _pattern_ppm_blobs(spark, sf_dir))
 
 
-def _image_phash_neardup_oracle(sf_dir: str = DRIVER_SF_DIR) -> str:
+def _image_phash_neardup_oracle(sf_dir: str) -> str:
     """sf-CONDITIONAL pairing oracle: brute-force Hamming ball over
     the closed-form hash table at driver scales (full recall spec —
     a banding bug that LOSES a true pair fails here); past that the
@@ -4977,7 +4970,7 @@ def q_embedding_neardup(spark, sf_dir):
         _t(spark, sf_dir, "embeddings"), threshold=0.4)
 
 
-def _neardup_lsh_oracle(sf_dir: str = DRIVER_SF_DIR, dim: int = 64,
+def _neardup_lsh_oracle(sf_dir: str, dim: int = 64,
                         threshold: float = 0.4) -> str:
     """Relational replica of cosine_neardup_pairs_lsh: identical plane
     literals (plane_component), BAND-LOCAL band values (bit i of band
@@ -5033,7 +5026,7 @@ SELECT id_a, id_b, sim FROM lshp
 """
 
 
-def _neardup_lsh_clusters_oracle(sf_dir: str = DRIVER_SF_DIR,
+def _neardup_lsh_clusters_oracle(sf_dir: str,
                                  dim: int = 64,
                                  threshold: float = 0.5) -> str:
     """Connected components over the banded-LSH cosine pair graph:
@@ -5102,7 +5095,7 @@ def q_embedding_neardup_lsh(spark, sf_dir):
         n_planes=n_planes, n_bands=n_bands)
 
 
-def _ann_lsh_oracle(sf_dir: str = DRIVER_SF_DIR, dim: int = 64,
+def _ann_lsh_oracle(sf_dir: str, dim: int = 64,
                     k: int = 5) -> str:
     """Regenerate the multiprobe LSH bucketing relationally: the plane
     literals come from the same plane_component() the Spark operator
@@ -5163,7 +5156,7 @@ def q_ann_lsh_topk(spark, sf_dir):
                       F.col("rank").cast("long").alias("rank"), "sim")
 
 
-def _ivf_oracle(sf_dir: str = DRIVER_SF_DIR, k: int = 5) -> str:
+def _ivf_oracle(sf_dir: str, k: int = 5) -> str:
     """Relational replica of ivf_ann_topk: deterministic sample
     centroids, 6-decimal-rounded cosine assignment with centroid-id
     tie-break, top-nprobe probes, exact rank within probed cells.
@@ -5602,7 +5595,7 @@ def q_split_leakage_audit(spark, sf_dir):
         key_col="doc_id", seed="split1")
 
 
-def _neardup_rate_by_source_oracle(sf_dir: str = DRIVER_SF_DIR) -> str:
+def _neardup_rate_by_source_oracle(sf_dir: str) -> str:
     return ("WITH sh AS MATERIALIZED ("
             + _SH_CTE.format(src="documents") + ")"
             + _minhash_pairs_chain(sf_dir) + """,
@@ -5649,7 +5642,7 @@ def q_neardup_rate_by_source(spark, sf_dir):
                           * 1_000_000) / 1_000_000).alias("dup_frac")))
 
 
-def _split_leakage_neardup_oracle(sf_dir: str = DRIVER_SF_DIR) -> str:
+def _split_leakage_neardup_oracle(sf_dir: str) -> str:
     return ("WITH sh AS MATERIALIZED ("
             + _SH_CTE.format(src="documents") + ")"
             + _minhash_pairs_chain(sf_dir) + """,
@@ -6652,7 +6645,7 @@ def q_embedding_quantize(spark, sf_dir):
     return quantize.quantize_int8_report(_t(spark, sf_dir, "embeddings"))
 
 
-def _bm25_oracle(sf_dir: str = DRIVER_SF_DIR, k: int = 10,
+def _bm25_oracle(sf_dir: str, k: int = 10,
                  k1: float = 1.2, b: float = 0.75) -> str:
     """Relational replica of retrieval.bm25_topk: identical posting /
     dl / df rollups, the IDENTICAL float expression tree per term
@@ -6763,7 +6756,7 @@ def q_char_entropy_quality(spark, sf_dir):
     return text_ops.char_entropy(_t(spark, sf_dir, "documents"))
 
 
-def _kcenter_oracle(sf_dir: str = DRIVER_SF_DIR, k: int = 4,
+def _kcenter_oracle(sf_dir: str, k: int = 4,
                     dim: int = 64) -> str:
     """Relational replica of cluster.kcenter_select, the k selection
     rounds UNROLLED as a CTE chain (the plane-literal unroll pattern):
@@ -6968,7 +6961,7 @@ def q_editdist_neardup(spark, sf_dir):
     return dedup.editdist_neardup_pairs(docs, max_dist=8, max_len=256)
 
 
-def _mmr_oracle(sf_dir: str = DRIVER_SF_DIR, k: int = 6,
+def _mmr_oracle(sf_dir: str, k: int = 6,
                 lam: float = 0.7, n_cands: int = 24,
                 qid: int = 0) -> str:
     """Relational replica of retrieval.mmr_select, the k greedy
@@ -7025,7 +7018,7 @@ def q_mmr_rerank(spark, sf_dir):
                                 query_id=0, k=6, lam=0.7, n_cands=24)
 
 
-def _hybrid_oracle(sf_dir: str = DRIVER_SF_DIR, k: int = 10,
+def _hybrid_oracle(sf_dir: str, k: int = 10,
                    c: float = 60.0) -> str:
     """RRF fusion replica: the bm25 oracle rides in as a nested-WITH
     subquery (unchanged — same queries, same k), the dense side is
@@ -7189,59 +7182,3 @@ def q_stream_score_auc(spark, sf_dir):
     drained = sw.run_available_now(counts, output_mode="complete",
                                    state_partitions=4)
     return classifier.auc_from_score_counts(drained)
-
-
-# ======================================================================
-# Registration order: the driver's correctness harness oracle-checks the
-# FIRST 50 entries of QUERIES. Priority goes to (a) the north-star
-# training-data-pipeline operators (dedup / similarity / multimodal /
-# text / pipeline), (b) one representative per reference-surface family,
-# (c) scale operators (salted agg, as-of/range join, sketches, windows).
-# Redundant reference-surface variants (second window forms, set-op
-# variants, subqueries) keep their oracles but sit past the window —
-# still covered by tools/check_oracle.py and the unit tests.
-# ======================================================================
-
-_PRIORITY: list[str] = [
-    # --- round-12 rotation (VERDICT r11 item 2), continuing the
-    # documented oldest-LAST-CHECKED-first backfill over the union of
-    # CORRECTNESS_r01..r11 keys: all 46 rows whose most recent driver
-    # check is round 8 (the r8-vintage remainder the r11 comment
-    # promised would lead this backfill), then the first 4
-    # r9-last-checked rows alphabetically (agg_salted,
-    # ann_quantized_topk, approx_distinct_sketch, argmax_per_group).
-    # Everything displaced stays green in the committed full sf0.01
-    # sweep for THIS round (SWEEP_SF001_r12.json — the r11 rotation
-    # cited a sweep file that was never committed; fixed per VERDICT
-    # r11 item 2, the r12 artifact is committed alongside this
-    # rotation). Remaining r9-last-checked rows lead the r13 backfill.
-    # (a) r8-last-checked remainder, alphabetical
-    "ann_ivf_topk", "ann_lsh_topk", "ann_recall", "anti_join",
-    "bucketed_join_agg", "contamination_severity", "dataset_drift_psi",
-    "decontaminate_fuzzy", "dedup_incremental", "dedup_minhash_estimate",
-    "dedup_minhash_lsh", "dedup_simhash", "doc_duplication_score",
-    "embedding_neardup", "expr_arith", "full_outer_join",
-    "intra_doc_dedup", "join_null_safe", "join_salted", "join_three",
-    "kmeans_assign_sizes", "kmeans_cluster_sizes", "mem_source_join",
-    "multimodal_image_features", "multimodal_resize_plan",
-    "orc_sink_roundtrip", "percentile_clip", "pipeline_curate_v2",
-    "pivot_status", "pmi_collocations", "range_join_events",
-    "schema_evolution_roundtrip", "select_project", "semi_join",
-    "shard_export_manifest", "sketch_quantiles",
-    "source_term_divergence", "sql_entry_q6", "stream_decontaminate",
-    "stream_dedup", "stream_drift_psi", "text_quality", "window_lag",
-    "window_ntile", "winnow_fingerprints", "wordlm_quality",
-    # (b) r9-last-checked head, alphabetical
-    "agg_salted", "ann_quantized_topk", "approx_distinct_sketch",
-    "argmax_per_group",
-]
-
-_missing = [n for n in _PRIORITY if n not in QUERIES]
-assert not _missing, f"_PRIORITY names not registered: {_missing}"
-assert len(_PRIORITY) <= 50, f"priority window overflow: {len(_PRIORITY)}"
-
-_tail = {n: f for n, f in QUERIES.items() if n not in set(_PRIORITY)}
-_head = {n: QUERIES[n] for n in _PRIORITY}
-QUERIES.clear()
-QUERIES.update(_head)
-QUERIES.update(_tail)

@@ -1,6 +1,6 @@
 """Unit tests for the north-star operator modules (dedup / similarity /
 text) over small in-memory fixtures — complements the DuckDB oracle
-coverage in tools/check_oracle.py with targeted semantic checks."""
+coverage in tests/test_oracle.py with targeted semantic checks."""
 
 from __future__ import annotations
 

@@ -1,8 +1,9 @@
 #!/usr/bin/env python
-"""Local replica of the driver's t2 correctness gate: run every
-``queries()`` entry on Spark and its ``oracle_sql()`` on DuckDB over the
-same parquet tables, then compare row count, schema (column names), and
-an order-insensitive value comparison.
+"""Oracle parity check: run every registered query on Spark and its
+oracle SQL on DuckDB over the same parquet tables, then compare row
+count, schema (column names), and an order-insensitive value comparison.
+``tests/test_oracle.py`` runs the same check on every query at sf0.01;
+this CLI runs it at any ``--sf-dir``.
 
 Usage: python tools/check_oracle.py [--sf-dir /root/testdata/sf0.01] [query ...]
 """
@@ -18,6 +19,8 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb  # noqa: E402
+
+from rivulus_spark.workload import QUERIES, oracle_sql_for  # noqa: E402
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
@@ -59,6 +62,33 @@ def compare(name, s_cols, s_rows, d_cols, d_rows) -> list[str]:
     return problems
 
 
+def connect(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    """A DuckDB connection with one view per table present in `sf_dir`."""
+    con = duckdb.connect()
+    for t in TABLES:
+        p = f"{sf_dir}/{t}.parquet"
+        if os.path.exists(p):
+            con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
+    return con
+
+
+def check_query(spark, con, name: str,
+                sf_dir: str) -> tuple[int, int, list[str]]:
+    """Run query `name` at `sf_dir` on Spark and its oracle on `con`.
+    Returns the Spark and oracle row counts and the problems, which are
+    empty when both agree. Spark and DuckDB errors propagate."""
+    sdf = QUERIES[name](spark, sf_dir)
+    s_cols = sdf.columns
+    s_rows = [tuple(r) for r in sdf.collect()]
+    sql = oracle_sql_for(name, sf_dir)
+    if sql is None:
+        return len(s_rows), 0, ["no oracle registered"]
+    res = con.execute(sql)
+    d_rows = res.fetchall()
+    return len(s_rows), len(d_rows), compare(
+        name, s_cols, s_rows, [d[0] for d in res.description], d_rows)
+
+
 def main():
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf-dir", default="/root/testdata/sf0.01")
@@ -84,18 +114,13 @@ def main():
     args = ap.parse_args()
 
     from rivulus_spark import get_spark
-    from rivulus_spark.workload import QUERIES, oracle_sql_for
 
     spark = get_spark("oracle-check")
-    con = duckdb.connect()
+    con = connect(args.sf_dir)
     if args.duck_threads:
         con.execute(f"SET threads={int(args.duck_threads)}")
     if args.duck_mem:
         con.execute(f"SET memory_limit='{args.duck_mem}'")
-    for t in TABLES:
-        p = f"{args.sf_dir}/{t}.parquet"
-        if os.path.exists(p):
-            con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
 
     excludes: dict[str, str] = {}
     for e in args.exclude:
@@ -110,49 +135,29 @@ def main():
         record[n] = {"status": "skip", "reason": excludes[n]}
     failures = 0
     for name in names:
-        fn = QUERIES[name]
         t0 = time.time()
         try:
-            sdf = fn(spark, args.sf_dir)
-            s_cols = sdf.columns
-            s_rows = [tuple(r) for r in sdf.collect()]
+            n_spark, n_oracle, problems = check_query(
+                spark, con, name, args.sf_dir)
         except Exception as e:
-            print(f"FAIL {name}: spark error: {e}")
+            print(f"FAIL {name}: {type(e).__name__}: {e}")
             failures += 1
             record[name] = {"status": "fail",
-                            "reason": f"spark error: {e}"[:400]}
+                            "reason": f"{type(e).__name__}: {e}"[:400]}
             continue
-        sql = oracle_sql_for(name, args.sf_dir)
-        if sql is None:
-            print(f"....  {name}: no oracle (rows-only) -> {len(s_rows)} rows "
-                  f"[{time.time()-t0:.1f}s]")
-            record[name] = {"status": "rows_only", "spark_rows": len(s_rows),
-                            "sec": round(time.time() - t0, 1)}
-            continue
-        try:
-            res = con.execute(sql)
-            d_cols = [d[0] for d in res.description]
-            d_rows = res.fetchall()
-        except Exception as e:
-            print(f"FAIL {name}: duckdb error: {e}")
-            failures += 1
-            record[name] = {"status": "fail",
-                            "reason": f"duckdb error: {e}"[:400]}
-            continue
-        problems = compare(name, s_cols, s_rows, d_cols, d_rows)
+        sec = round(time.time() - t0, 1)
         if problems:
             failures += 1
-            print(f"FAIL {name} ({len(s_rows)} spark rows, {len(d_rows)} oracle rows) "
-                  f"[{time.time()-t0:.1f}s]")
+            print(f"FAIL {name} ({n_spark} spark rows, {n_oracle} oracle "
+                  f"rows) [{sec}s]")
             for p in problems:
                 print(f"      {p}")
-            record[name] = {"status": "fail", "spark_rows": len(s_rows),
-                            "oracle_rows": len(d_rows),
+            record[name] = {"status": "fail", "spark_rows": n_spark,
+                            "oracle_rows": n_oracle,
                             "problems": problems[:4]}
         else:
-            print(f"PASS  {name}: {len(s_rows)} rows [{time.time()-t0:.1f}s]")
-            record[name] = {"status": "pass", "rows": len(s_rows),
-                            "sec": round(time.time() - t0, 1)}
+            print(f"PASS  {name}: {n_spark} rows [{sec}s]")
+            record[name] = {"status": "pass", "rows": n_spark, "sec": sec}
     spark.stop()
     print(f"\n{len(names) - failures}/{len(names)} queries match")
     if args.json_out:
