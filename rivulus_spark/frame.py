@@ -41,6 +41,7 @@ from .errors import (
 )
 from .expressions.expr import Expr, Schema
 from .schema import DataType, comparable, infer_series_type, struct_type
+from .sources.tables import scan
 
 # no "cross": keys are mandatory in this API, so a requested cross
 # product would silently execute as an inner equi-join — reject it
@@ -127,7 +128,7 @@ class LazyFrame:
 
     @classmethod
     def from_parquet(cls, spark: SparkSession, path: str) -> "LazyFrame":
-        return cls(spark.read.parquet(path))
+        return cls(scan(spark, path))
 
     @classmethod
     def from_orc(cls, spark: SparkSession, path: str) -> "LazyFrame":

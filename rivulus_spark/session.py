@@ -4,7 +4,8 @@ Local testing runs on ``local[$SPARK_GRAFT_CPUS]`` (default all cores);
 the same config block is what we would ship for a real cluster — AQE for
 runtime re-planning (skew joins, partition coalescing), Arrow for any
 pandas-UDF boundary, and a UTC session timezone so timestamp semantics
-are deterministic across engines.
+are deterministic across engines. The codegen cache holds 2000 classes,
+so a repeated workload reuses its generated code instead of recompiling.
 """
 
 from __future__ import annotations
@@ -33,6 +34,9 @@ def configure(builder: SparkSession.Builder) -> SparkSession.Builder:
         .config("spark.sql.autoBroadcastJoinThreshold", "64m")
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.sql.files.maxPartitionBytes", "128m")
+        # static conf; at the default 100 entries one relational pass
+        # evicts its own generated classes and recompiles them
+        .config("spark.sql.codegen.cache.maxEntries", "2000")
         # catalog (bucketed) tables need a warehouse path; keep it out
         # of the repo working tree
         .config("spark.sql.warehouse.dir",

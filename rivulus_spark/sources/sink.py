@@ -22,6 +22,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .tables import scan
+
 
 def write_parquet(df: DataFrame, path: str,
                   partition_by: list[str] | None = None,
@@ -43,10 +45,9 @@ def read_parquet(spark: SparkSession, path: str,
     before a column existed surface it as null. Footer merging is a
     driver-side listing cost, so leave it off (Spark's default) unless
     the dataset actually evolved."""
-    r = spark.read
     if merge_schema:
-        r = r.option("mergeSchema", "true")
-    return r.parquet(path)
+        return spark.read.option("mergeSchema", "true").parquet(path)
+    return scan(spark, path)
 
 
 def write_csv(df: DataFrame, path: str, mode: str = "overwrite",

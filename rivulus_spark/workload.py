@@ -2186,7 +2186,7 @@ def _replay_stream(spark: SparkSession, df: DataFrame, source: str,
     staging = _staged_stream_parquet(df, source, tag, n_files=n_files,
                                      range_col=range_col)
     return (spark.readStream
-            .schema(spark.read.parquet(staging).schema)
+            .schema(df.schema)
             .option("maxFilesPerTrigger", per_trigger)
             .parquet(staging))
 

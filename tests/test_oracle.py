@@ -22,7 +22,7 @@ from rivulus_spark.workload import DRIVER_SF_DIR, QUERIES
 
 sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(
     os.path.abspath(__file__))), "tools"))
-from check_oracle import check_query, connect  # noqa: E402
+from check_oracle import build_parser, check_query, connect  # noqa: E402
 
 DIRTY_DATA_QUERIES = ("dedup_normalized", "split_leakage_audit")
 N_DUPLICATED = 40
@@ -77,3 +77,13 @@ def test_query_matches_oracle(spark, duck, dirty_sf_dir, name):
         f"{name} at {sf_dir} ({n_spark} spark rows, {n_oracle} oracle "
         "rows):\n" + "\n".join(problems))
     assert n_spark >= 1, f"{name}: 0 rows at {sf_dir}, nothing was compared"
+
+
+def test_cli_names_after_exclude_stay_queries():
+    args = build_parser().parse_args(
+        ["--exclude", "agg_q1=demo", "select_project"])
+    assert args.queries == ["select_project"]
+    assert args.exclude == ["agg_q1=demo"]
+    args = build_parser().parse_args(
+        ["--exclude", "agg_q1", "--exclude", "agg_q5=slow"])
+    assert args.queries == [] and args.exclude == ["agg_q1", "agg_q5=slow"]

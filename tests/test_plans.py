@@ -776,3 +776,22 @@ def test_band_occupancy_plan_is_joinless(spark):
     p = plan(spark, "dedup_band_occupancy")
     assert "Join" not in p, p
     assert p.count("HashAggregate") >= 2, p
+
+
+def test_steady_relational_pass_compiles_no_classes(spark):
+    """A second pass of the relational mix finds every generated class
+    in the codegen cache: Janino compiles nothing. At Spark's default of
+    100 entries the mix evicts its own classes and recompiles them."""
+    from perfbench.workloads import WORKLOADS
+
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+
+    def run_pass() -> int:
+        before = metrics.METRIC_COMPILATION_TIME().getCount()
+        for name in WORKLOADS["relational"]:
+            QUERIES[name](spark, SF).write.format("noop") \
+                .mode("overwrite").save()
+        return metrics.METRIC_COMPILATION_TIME().getCount() - before
+
+    assert run_pass() > 0
+    assert run_pass() == 0

@@ -1,15 +1,24 @@
 """Source/sink tests: the CSV parsing contract (reference:
 src/execution/file_stream.rs:59-150 — schema required, header skipped,
 ""/"null" => null, boolean tokens t/f/1/0), parquet round-trips with
-partitioning, and SQL-over-views access."""
+partitioning, SQL-over-views access, and footer-schema parquet scans."""
 
 from __future__ import annotations
 
+import datetime
+import decimal
+import glob
+import os
+
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 
+from perfbench.workloads import WORKLOADS
 from rivulus_spark import DataType, LazyFrame, col
 from rivulus_spark.errors import ColumnNotFoundError, SchemaRequiredError
-from rivulus_spark.sources.tables import register_views
+from rivulus_spark.sources.tables import register_views, scan
+from rivulus_spark.workload import DRIVER_SF_DIR, QUERIES
 
 CSV_SCHEMA = [("id", DataType.INT64), ("name", DataType.STRING),
               ("score", DataType.FLOAT64), ("active", DataType.BOOLEAN)]
@@ -278,3 +287,88 @@ def test_write_bucketed_rejects_unsafe_table_names(spark):
     for bad in ("../oops", "a/b", "t; DROP TABLE x", "", "1badstart"):
         with pytest.raises(ValueError):
             bucketed.write_bucketed(df, bad, ["id"], 4)
+
+
+def _arrow_file(tmp_path, name, **columns) -> str:
+    path = str(tmp_path / f"{name}.parquet")
+    pq.write_table(pa.table(columns), path)
+    return path
+
+
+ARROW_CASES = {
+    "uint8": lambda: {"v": pa.array([1, 255], pa.uint8())},
+    "uint64": lambda: {"v": pa.array([1, 2**64 - 1], pa.uint64())},
+    "timestamp_utc": lambda: {"v": pa.array([0, None],
+                                            pa.timestamp("us", "UTC"))},
+    "date_decimal": lambda: {
+        "d": pa.array([datetime.date(2020, 1, 1), None]),
+        "p": pa.array([decimal.Decimal("1.25"), None], pa.decimal128(10, 2))},
+    "duration": lambda: {"v": pa.array([1, 2], pa.duration("us"))},
+    "null": lambda: {"v": pa.array([None, None], pa.null())},
+    "nested": lambda: {"v": pa.array(
+        [[{"t": 0, "s": "a"}], None],
+        pa.list_(pa.struct([("t", pa.timestamp("us")), ("s", pa.string())])))},
+}
+
+
+class TestScan:
+    """``tables.scan`` types a file as Spark's inference does, without
+    the inference job."""
+
+    @pytest.mark.parametrize("table", sorted(
+        f[:-len(".parquet")] for f in os.listdir(DRIVER_SF_DIR)
+        if f.endswith(".parquet")))
+    def test_driver_table_schema_is_inferred_schema(self, spark, table):
+        path = f"{DRIVER_SF_DIR}/{table}.parquet"
+        assert scan(spark, path).schema == spark.read.parquet(path).schema
+
+    @pytest.mark.parametrize("case", sorted(ARROW_CASES))
+    def test_arrow_file_schema_is_inferred_schema(self, spark, tmp_path,
+                                                  case):
+        path = _arrow_file(tmp_path, case, **ARROW_CASES[case]())
+        assert scan(spark, path).schema == spark.read.parquet(path).schema
+        assert scan(spark, path).collect() == \
+            spark.read.parquet(path).collect()
+
+    def test_int96_file_schema_is_inferred_schema(self, spark, tmp_path):
+        key = "spark.sql.parquet.outputTimestampType"
+        before = spark.conf.get(key)
+        spark.conf.set(key, "INT96")
+        try:
+            spark.sql("SELECT 1L AS id, "
+                      "TIMESTAMP'2024-01-02 03:04:05' AS ts") \
+                .coalesce(1).write.parquet(str(tmp_path / "int96"))
+        finally:
+            spark.conf.set(key, before)
+        [path] = glob.glob(str(tmp_path / "int96" / "*.parquet"))
+        assert pq.read_schema(path).field("ts").type == pa.timestamp("ns")
+        assert scan(spark, path).schema == spark.read.parquet(path).schema
+        assert scan(spark, path).collect() == \
+            spark.read.parquet(path).collect()
+
+    @pytest.mark.parametrize("case,message", [
+        ("nanos", "PARQUET_TYPE_ILLEGAL"),
+        ("not_parquet", "is not a Parquet file")])
+    def test_unreadable_file_raises_sparks_error(self, spark, tmp_path,
+                                                  case, message):
+        if case == "nanos":
+            path = _arrow_file(tmp_path, case,
+                               v=pa.array([1, 2], pa.timestamp("ns")))
+        else:
+            path = str(tmp_path / f"{case}.parquet")
+            with open(path, "w") as f:
+                f.write("not parquet")
+        errors = []
+        for read in (spark.read.parquet, lambda p: scan(spark, p)):
+            with pytest.raises(Exception, match=message) as e:
+                read(path)
+            errors.append(type(e.value))
+        assert errors[0] is errors[1]
+
+    def test_building_relational_queries_starts_no_jobs(self, spark):
+        dag = spark.sparkContext._jsc.sc().dagScheduler()
+        for name in WORKLOADS["relational"]:
+            jobs_before = dag.numTotalJobs()
+            QUERIES[name](spark, DRIVER_SF_DIR)
+            assert dag.numTotalJobs() == jobs_before, \
+                f"building {name} ran a Spark job"

@@ -5,7 +5,8 @@ count, schema (column names), and an order-insensitive value comparison.
 ``tests/test_oracle.py`` runs the same check on every query at sf0.01;
 this CLI runs it at any ``--sf-dir``.
 
-Usage: python tools/check_oracle.py [--sf-dir /root/testdata/sf0.01] [query ...]
+Usage: python tools/check_oracle.py [--sf-dir /root/testdata/sf0.01]
+       [--exclude name[=reason]]... [query ...]
 """
 
 from __future__ import annotations
@@ -89,13 +90,14 @@ def check_query(spark, con, name: str,
         name, s_cols, s_rows, [d[0] for d in res.description], d_rows)
 
 
-def main():
+def build_parser() -> argparse.ArgumentParser:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf-dir", default="/root/testdata/sf0.01")
-    ap.add_argument("--exclude", nargs="*", default=[],
-                    help="queries to skip, as name=reason or bare name "
-                         "(e.g. brute-force O(n^2) oracles that do not "
-                         "finish at sf>=1); reasons land in --json-out")
+    ap.add_argument("--exclude", action="append", default=[],
+                    metavar="NAME[=REASON]",
+                    help="a query to skip, one flag per query (e.g. "
+                         "brute-force O(n^2) oracles that do not finish "
+                         "at sf>=1); reasons land in --json-out")
     ap.add_argument("--json-out", default=None,
                     help="write per-query results (pass/fail/skip + "
                          "reason + rows + seconds) as a JSON artifact")
@@ -111,7 +113,11 @@ def main():
                          "char-fold oracles OOM a 48GB budget at 32 "
                          "threads but fit at 8")
     ap.add_argument("queries", nargs="*")
-    args = ap.parse_args()
+    return ap
+
+
+def main():
+    args = build_parser().parse_args()
 
     from rivulus_spark import get_spark
 
