@@ -637,9 +637,18 @@ def lsh_candidate_pairs(sigs: DataFrame, id_col: str = "id",
                         rows_per_band: int = LSH_ROWS,
                         num_perm: int = NUM_PERM,
                         band_widths: list[int] | None = None) -> DataFrame:
-    """LSH banding: docs sharing any full band are candidates.
-    One shuffle keyed on the band hash; output is deduplicated
-    candidate pairs (doc_a < doc_b).
+    """LSH banding: docs sharing any full band are candidates; output is
+    deduplicated candidate pairs (doc_a < doc_b).
+
+    The self-join is pinned to a shuffled hash join, as is
+    ``similarity.cosine_neardup_pairs_lsh``'s band self-join. Both sides
+    are then the same hash-partitioning of the band rows on ``bh``,
+    which Spark reuses, so the upstream (for :func:`minhash_lsh_dedup`
+    the Arrow signature pass) runs once. Left to the planner, a band
+    table under ``autoBroadcastJoinThreshold`` is broadcast on one side
+    and shuffled on the other; a broadcast exchange and a shuffle
+    exchange are never reused for each other, so the upstream would run
+    once per side.
 
     ``num_perm`` must match the signature width the caller built
     (element_at slots past the array end would silently yield nulls —
@@ -664,8 +673,9 @@ def lsh_candidate_pairs(sigs: DataFrame, id_col: str = "id",
     # join spends absorbing singletons. Keep the plain self-join.
     l, r = exploded.alias("l"), exploded.alias("r")
     return (
-        l.join(r, (F.col("l.bh") == F.col("r.bh"))
-               & (F.col("l.id") < F.col("r.id")))
+        l.hint("shuffle_hash")
+        .join(r, (F.col("l.bh") == F.col("r.bh"))
+              & (F.col("l.id") < F.col("r.id")))
         .select(F.col("l.id").alias("doc_a"), F.col("r.id").alias("doc_b"))
         .distinct()
     )
@@ -827,17 +837,14 @@ def minhash_lsh_dedup(df: DataFrame, threshold: float = 0.8, k: int = 3,
                          "edges are connected-component proxies, and a "
                          "pair-level restriction on them changes the "
                          "components, not just the reported pair subset")
-    # NOT persisted (opt r11): both banding modes consume the
-    # signature table through ONE band-hash exchange — the self-join's
-    # two sides (pairs) and the min-agg + probe (star) canonicalize to
-    # the same child, so exchange/stage reuse already materializes the
-    # post-signature rows once in shuffle files (guide §2.4). The
-    # persist on top duplicated that sig-sized materialization — ~1 KB
-    # x n_docs of extra storage pressure at corpus scale for zero
-    # saved compute. Locally neutral (interleaved A/B, 5 reps each:
-    # min 1.929s persisted vs 1.923s without, tree-CPU parity 21.3 vs
-    # 22.1s — the CPU parity is the proof the Arrow signature pass
-    # does NOT re-run without the persist).
+    # The signature table is not persisted: both banding modes read it
+    # through one exchange of the band rows hash-partitioned on the band
+    # hash, which Spark reuses for every consumer, so the Arrow pass
+    # runs once and its rows are materialized once, in shuffle files.
+    # Reuse needs every consumer to be that same shuffle: the star
+    # window partitions on the band hash by construction, and the pair
+    # self-join is pinned to a shuffled hash join (a broadcast side
+    # would be a second, unreusable exchange over a second Arrow pass).
     sigs = minhash_signatures_arrow(df, text_col, id_col, k, num_perm)
     gen = (lsh_candidate_pairs if edge_mode == "pairs"
            else lsh_candidate_edges_star)

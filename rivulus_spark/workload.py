@@ -3112,10 +3112,14 @@ def q_partitioned_sink_roundtrip(spark, sf_dir):
     the partition column — the read plan prunes non-matching ``lang=*/``
     directories (PartitionFilters, asserted in tests/test_plans.py)
     before any row group is opened. The write is a per-run fixture; the
-    scan under test is the pruned partitioned read."""
+    scan under test is the pruned partitioned read. The directory is
+    read by the schema it was written with (the partition column moves
+    last), so building the query runs no schema-inference job."""
     import hashlib
     import os
     import tempfile
+
+    from pyspark.sql.types import StructType
 
     from .sources import sink
 
@@ -3125,7 +3129,9 @@ def q_partitioned_sink_roundtrip(spark, sf_dir):
         "rivulus_part_docs_"
         + hashlib.md5(sf_dir.encode()).hexdigest()[:12])
     sink.write_parquet(docs, path, partition_by=["lang"])
-    back = (sink.read_parquet(spark, path)
+    schema = StructType([f for f in docs.schema if f.name != "lang"]
+                        + [docs.schema["lang"]])
+    back = (spark.read.schema(schema).parquet(path)
             .filter(F.col("lang").isin("en", "de")))
     return (back.groupBy("lang", "source")
             .agg(F.count("*").alias("n_docs"),

@@ -198,8 +198,14 @@ def test_tfidf_terms_group_limit_no_text_shuffle(spark):
 
 def test_partitioned_read_prunes_directories(spark):
     # the read side of the partitioned sink must prune lang=*/ dirs at
-    # planning time (PartitionFilters), not filter rows post-scan
-    p = plan(spark, "partitioned_sink_roundtrip")
+    # planning time (PartitionFilters), not filter rows post-scan; the
+    # build's one job is the sink write, since the directory is read
+    # back by its known schema, not by a schema-inference job
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    jobs_before = dag.numTotalJobs()
+    df = QUERIES["partitioned_sink_roundtrip"](spark, SF)
+    assert dag.numTotalJobs() - jobs_before == 1
+    p = df._jdf.queryExecution().executedPlan().toString()
     pf = [l for l in p.splitlines() if "PartitionFilters" in l]
     assert pf and "lang" in pf[0]
 
@@ -279,6 +285,7 @@ def test_window_ntile_has_no_unpartitioned_data_window(spark):
     "pipeline_curate", "pipeline_curate_v2", "pipeline_stats",
     "dedup_survivors", "dedup_clusters", "cross_doc_line_dedup",
     "semantic_dedup", "semantic_dedup_2level",
+    "neardup_rate_by_source", "split_leakage_neardup",
 ])
 def test_heavy_tail_banded_paths_are_equi_joins(spark, name):
     p = plan(spark, name)
@@ -303,6 +310,54 @@ def test_lsh_band_stage_never_falls_back_to_interpreted(spark, name):
     finally:
         spark.conf.set("spark.sql.codegen.fallback", prev)
     assert rows is not None
+
+
+def _scope_names(cluster) -> list[str]:
+    names = [cluster.name()]
+    children = cluster.childClusters()
+    for i in range(children.size()):
+        names += _scope_names(children.apply(i))
+    return names
+
+
+@pytest.mark.parametrize("name", [
+    "dedup_minhash_lsh", "decontaminate_fuzzy", "pipeline_curate",
+    "pipeline_stats", "neardup_rate_by_source", "split_leakage_neardup",
+])
+def test_minhash_signature_pass_runs_in_one_stage(spark, name):
+    """Every query through ``dedup.minhash_lsh_dedup`` computes its
+    MinHash signatures (the Arrow ``mapInPandas`` pass) in exactly one
+    stage that runs tasks: the band self-join's two sides share one
+    reused shuffle of the band rows. A broadcast side would be a second
+    exchange over a second signature pass, two such stages.
+
+    Counted from the stages' RDD operation graphs, so a stage that reads
+    a cache built over a Python lineage also holds a ``MapInPandas``
+    scope without running Python. That is why
+    ``dedup_minhash_estimate``, ``dedup_incremental`` and
+    ``image_phash_neardup`` (which persist their Python output and read
+    it in several stages) are not listed."""
+    from rivulus_spark import cache
+
+    sc = spark.sparkContext._jsc.sc()
+    first = sc.dagScheduler().nextStageId()
+    try:
+        QUERIES[name](spark, SF).write.format("noop") \
+            .mode("overwrite").save()
+    finally:
+        cache.unpersist_all()
+    sc.listenerBus().waitUntilEmpty()
+    # stages that ran tasks; skipped ones (reused shuffles) ran none, and
+    # the status store may already have dropped stages that never ran
+    tracker = spark.sparkContext.statusTracker()
+    ran = [sid for sid in range(first, sc.dagScheduler().nextStageId())
+           if (info := tracker.getStageInfo(sid)) is not None
+           and info.numCompletedTasks > 0]
+    python_stages = [
+        sid for sid in ran
+        if any("MapInPandas" in n for n in _scope_names(
+            sc.statusStore().operationGraphForStage(sid).rootCluster()))]
+    assert len(python_stages) == 1, python_stages
 
 
 def test_kmeans_assignment_is_vectorized_map(spark):
