@@ -236,8 +236,8 @@ def fuzzy_contamination(train: DataFrame, eval_df: DataFrame,
     cross-side predicate is pushed into the chain as a
     ``cand_filter``, so same-side candidates — the train×train
     near-dups that dominate any real corpus's pair mass — are dropped
-    BEFORE the shingle re-explode and intersection joins instead of
-    after them. Verification is per-pair independent, so the output
+    BEFORE the verification join and aggregate instead of after
+    them. Verification is per-pair independent, so the output
     is identical to post-filtering (parity-tested); the verify cost
     becomes ∝ cross-side candidates, never |train|×|train| near-dup
     incidence, and never |train| x |eval|. The restriction joins the

@@ -5691,8 +5691,8 @@ def q_split_leakage_neardup(spark, sf_dir):
     candidate pair's two splits are re-derivable as a pure projection
     (sample.split_expr on doc_a/doc_b — no join), and same-split
     candidates (~81% of pairs under 90/5/5: 0.9² + 2·0.05²) are
-    dropped before the shingle re-explode and intersection joins
-    instead of after them. Verification is per-pair independent, so
+    dropped before the verification join and aggregate instead of
+    after them. Verification is per-pair independent, so
     the leak report is identical (parity-tested; oracle unchanged)."""
     from .operators import sample
 

@@ -87,6 +87,30 @@ def test_shingles(spark):
     assert short.select(dedup.shingles("text").alias("s")).first().s == []
 
 
+def test_shingles_match_shingle_rows(spark):
+    """Per id, the ``shingles`` array is the set of ``shingle_rows``
+    strings: over the sf0.001 documents plus a doc under k tokens, text
+    starting with a tab, a null text and two rows sharing one id (whose
+    set is the union of both rows')."""
+    corpus = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    extra = spark.createDataFrame(
+        [(-1, "a b"), (-2, "\ta b c d"), (-3, None),
+         (-4, "x y z w"), (-4, "p q r x y z")],
+        "doc_id long, text string")
+    df = corpus.select("doc_id", "text").unionByName(extra)
+    arrays = {}
+    for r in df.select("doc_id", dedup.shingles("text").alias("s")).collect():
+        assert len(r.s) == len(set(r.s))
+        arrays.setdefault(r.doc_id, set()).update(r.s)
+    rows = {}
+    for r in dedup.shingle_rows(df).collect():
+        rows.setdefault(r.id, set()).add(r.s)
+    assert {i: s for i, s in arrays.items() if s} == rows
+    assert arrays[-1] == arrays[-3] == set()
+    assert " a b" in arrays[-2]
+    assert arrays[-4] == {"x y z", "y z w", "p q r", "q r x", "r x y"}
+
+
 def test_exact_duplicates(docs):
     out = sorted((r.keep_id, r.n_copies)
                  for r in dedup.exact_duplicates(docs).collect())

@@ -14,8 +14,16 @@ SF = "/root/testdata/sf0.001"
 
 
 def plan(spark, name: str) -> str:
-    df = QUERIES[name](spark, SF)
-    return df._jdf.queryExecution().executedPlan().toString()
+    """The executed plan of a registered query at sf0.001. Whatever the
+    query persisted is released afterwards: Spark's cache manager would
+    otherwise substitute it into later plans over the same files."""
+    from rivulus_spark import cache
+
+    try:
+        df = QUERIES[name](spark, SF)
+        return df._jdf.queryExecution().executedPlan().toString()
+    finally:
+        cache.unpersist_all()
 
 
 def test_filter_pushdown_reaches_scan(spark):
@@ -320,6 +328,26 @@ def _scope_names(cluster) -> list[str]:
     return names
 
 
+def _stages_run(spark, df) -> list[int]:
+    """Run ``df`` to a ``noop`` sink, release what it persisted and
+    return the ids of the stages that ran tasks. Skipped stages (reused
+    shuffles) ran none, and the status store may already have dropped
+    stages that never ran."""
+    from rivulus_spark import cache
+
+    sc = spark.sparkContext._jsc.sc()
+    first = sc.dagScheduler().nextStageId()
+    try:
+        df.write.format("noop").mode("overwrite").save()
+    finally:
+        cache.unpersist_all()
+    sc.listenerBus().waitUntilEmpty()
+    tracker = spark.sparkContext.statusTracker()
+    return [sid for sid in range(first, sc.dagScheduler().nextStageId())
+            if (info := tracker.getStageInfo(sid)) is not None
+            and info.numCompletedTasks > 0]
+
+
 @pytest.mark.parametrize("name", [
     "dedup_minhash_lsh", "decontaminate_fuzzy", "pipeline_curate",
     "pipeline_stats", "neardup_rate_by_source", "split_leakage_neardup",
@@ -337,27 +365,28 @@ def test_minhash_signature_pass_runs_in_one_stage(spark, name):
     ``dedup_minhash_estimate``, ``dedup_incremental`` and
     ``image_phash_neardup`` (which persist their Python output and read
     it in several stages) are not listed."""
-    from rivulus_spark import cache
-
     sc = spark.sparkContext._jsc.sc()
-    first = sc.dagScheduler().nextStageId()
-    try:
-        QUERIES[name](spark, SF).write.format("noop") \
-            .mode("overwrite").save()
-    finally:
-        cache.unpersist_all()
-    sc.listenerBus().waitUntilEmpty()
-    # stages that ran tasks; skipped ones (reused shuffles) ran none, and
-    # the status store may already have dropped stages that never ran
-    tracker = spark.sparkContext.statusTracker()
-    ran = [sid for sid in range(first, sc.dagScheduler().nextStageId())
-           if (info := tracker.getStageInfo(sid)) is not None
-           and info.numCompletedTasks > 0]
+    ran = _stages_run(spark, QUERIES[name](spark, SF))
     python_stages = [
         sid for sid in ran
         if any("MapInPandas" in n for n in _scope_names(
             sc.statusStore().operationGraphForStage(sid).rootCluster()))]
     assert len(python_stages) == 1, python_stages
+
+
+def test_minhash_verification_runs_in_few_stages(spark):
+    """``dedup_minhash_lsh`` verifies its candidates with one join of
+    (doc, pair) rows and one per-pair aggregate, so the whole query runs
+    in at most 8 stages that run tasks, and building it persists
+    nothing."""
+    from rivulus_spark import cache
+
+    before = list(cache._PERSISTED)
+    df = QUERIES["dedup_minhash_lsh"](spark, SF)
+    persisted = list(cache._PERSISTED)
+    ran = _stages_run(spark, df)
+    assert persisted == before
+    assert len(ran) <= 8, ran
 
 
 def test_kmeans_assignment_is_vectorized_map(spark):
