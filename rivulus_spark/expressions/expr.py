@@ -20,12 +20,13 @@ algebra; Catalyst handles it natively.
 from __future__ import annotations
 
 import enum
+import operator
 from typing import Any
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from ..errors import ColumnNotFoundError
+from ..errors import ColumnNotFoundError, MixedTypesError
 from ..schema import DataType, infer_value_type, promote_numeric
 
 Schema = list[tuple[str, DataType]]
@@ -50,6 +51,15 @@ class Op(enum.Enum):
 _COMPARISONS = {Op.EQ, Op.EQ_NULL_SAFE, Op.NEQ, Op.LT, Op.GT, Op.LTE, Op.GTE}
 _LOGICAL = {Op.AND, Op.OR}
 _ARITHMETIC = {Op.ADD, Op.SUB, Op.MUL, Op.DIV}
+#: the Column each op compiles to; every Column built costs JVM
+#: round-trips, so a node builds exactly one
+_BUILD = {
+    Op.ADD: operator.add, Op.SUB: operator.sub, Op.MUL: operator.mul,
+    Op.DIV: operator.truediv, Op.EQ: operator.eq,
+    Op.EQ_NULL_SAFE: lambda l, r: l.eqNullSafe(r), Op.NEQ: operator.ne,
+    Op.LT: operator.lt, Op.GT: operator.gt, Op.LTE: operator.le,
+    Op.GTE: operator.ge, Op.AND: operator.and_, Op.OR: operator.or_,
+}
 
 
 class Expr:
@@ -167,6 +177,28 @@ class Expr:
             return DataType.BOOLEAN
         return promote_numeric(lt_, rt)
 
+    def known_type(self, schema: Schema) -> DataType | None:
+        """The logical type of the compiled Column's Spark type, where
+        the typing rules fix it: ``output_type``, except None where
+        Spark's own coercion decides — arithmetic over a Null,
+        non-numeric or unknown operand, and literals outside the
+        five-type core."""
+        if self.kind == "column":
+            return self.output_type(schema)
+        if self.kind == "alias":
+            return self.child.known_type(schema)
+        if self.kind == "literal":
+            try:
+                return infer_value_type(self.value)
+            except MixedTypesError:
+                return None
+        if self.op not in _ARITHMETIC:
+            return DataType.BOOLEAN
+        lt_, rt = self.left.known_type(schema), self.right.known_type(schema)
+        if lt_ is None or rt is None or not (lt_.is_numeric and rt.is_numeric):
+            return None
+        return promote_numeric(lt_, rt)
+
     def referenced_columns(self) -> list[str]:
         if self.kind == "column":
             return [self.name]
@@ -185,9 +217,10 @@ class Expr:
     # -- compilation to Spark -----------------------------------------
     def to_spark(self, schema: Schema) -> Column:
         """Compile to a Spark Column. ``schema`` drives the reference's
-        typing rules (notably Int64/Int64 division -> Int64)."""
+        typing rules (notably Int64/Int64 division -> Int64). A bare
+        column already carries its output name and is not aliased."""
         col = self._compile(schema)
-        return col.alias(self.output_name())
+        return col if self.kind == "column" else col.alias(self.output_name())
 
     def _compile(self, schema: Schema) -> Column:
         if self.kind == "column":
@@ -198,22 +231,13 @@ class Expr:
             return self.child._compile(schema)
         l = self.left._compile(schema)
         r = self.right._compile(schema)
-        op = self.op
-        if op in _ARITHMETIC:
-            out = {Op.ADD: l + r, Op.SUB: l - r, Op.MUL: l * r, Op.DIV: l / r}[op]
-            if op is Op.DIV and self.output_type(schema) is DataType.INT64:
-                # reference semantics: Int64/Int64 stays Int64, truncating
-                # toward zero. Spark's integral `div` does exactly that in
-                # int64 arithmetic; the former (l / r).cast("long") detour
-                # through Double silently lost precision at |value| >= 2^53.
-                out = F.call_function("div", l, r)
-            return out
-        if op in _COMPARISONS:
-            if op is Op.EQ_NULL_SAFE:
-                return l.eqNullSafe(r)
-            return {Op.EQ: l == r, Op.NEQ: l != r, Op.LT: l < r,
-                    Op.GT: l > r, Op.LTE: l <= r, Op.GTE: l >= r}[op]
-        return (l & r) if op is Op.AND else (l | r)
+        if self.op is Op.DIV and self.output_type(schema) is DataType.INT64:
+            # reference semantics: Int64/Int64 stays Int64, truncating
+            # toward zero. Spark's integral `div` does exactly that in
+            # int64 arithmetic; the former (l / r).cast("long") detour
+            # through Double silently lost precision at |value| >= 2^53.
+            return F.call_function("div", l, r)
+        return _BUILD[self.op](l, r)
 
     def __repr__(self) -> str:
         if self.kind == "column":

@@ -13,6 +13,14 @@ Tungsten. What this layer adds is the reference's *semantics*: eager
 column validation with reference-style errors, the join output-schema
 contract, expression typing rules, and dual collect modes.
 
+Like the reference's logical plan (plan.rs:63-113), a LazyFrame also
+carries its logical schema: parquet sources take it from the schema
+they were read by, ``select`` derives it from each expression's output
+name and type, ``join`` from both inputs by the output contract, and
+row-only operators (filter, limit, sort, distinct) pass it through.
+Validation then costs no JVM round-trip; every other operator reads
+the schema from the JVM once, on first use.
+
 Divergences from the reference (intentional, SURVEY §7.4):
 - joins implement the reference's LOGICAL schema contract (left columns,
   then right minus right key, ``_right`` suffix on collisions); its
@@ -29,6 +37,7 @@ from typing import Any, Iterable, Iterator
 
 from pyspark.sql import Column, DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from .errors import (
     ColumnNotFoundError,
@@ -41,7 +50,7 @@ from .errors import (
 )
 from .expressions.expr import Expr, Schema
 from .schema import DataType, comparable, infer_series_type, struct_type
-from .sources.tables import scan
+from .sources.tables import scan_typed
 
 # no "cross": keys are mandatory in this API, so a requested cross
 # product would silently execute as an inner equi-join — reject it
@@ -53,9 +62,32 @@ _JOIN_TYPES = {"inner", "left", "right", "outer", "full", "semi", "anti"}
 _RIGHT_PRESERVING = {"right", "outer", "full"}
 
 
+def _logical(st: StructType) -> Schema:
+    """(name, logical DataType) pairs of a Spark schema; superset Spark
+    types map to the NULL placeholder."""
+    out: Schema = []
+    for f in st.fields:
+        dt = DataType.from_spark(f.dataType)
+        out.append((f.name, dt if dt is not None else DataType.NULL))
+    return out
+
+
+def _coalesced(a: DataType, b: DataType) -> DataType | None:
+    """Logical type of ``coalesce`` over keys typed ``a`` and ``b``;
+    None where Spark's type widening of superset types decides."""
+    if a is b and a is not DataType.NULL:
+        return a
+    if {a, b} == {DataType.INT64, DataType.FLOAT64}:
+        return DataType.FLOAT64
+    return None
+
+
 class LazyFrame:
-    def __init__(self, df: DataFrame):
+    def __init__(self, df: DataFrame, schema: Schema | None = None):
         self._df = df
+        # the logical schema where an operator derived it, else read
+        # from the JVM on first use
+        self._schema = schema
 
     # ------------------------------------------------------------------
     # sources
@@ -96,8 +128,7 @@ class LazyFrame:
                     v = float(v)
                 row.append(v)
             rows.append(tuple(row))
-        st = struct_type(fields)
-        return cls(spark.createDataFrame(rows, st))
+        return cls(spark.createDataFrame(rows, struct_type(fields)), fields)
 
     @classmethod
     def from_csv(cls, spark: SparkSession, path: str,
@@ -128,7 +159,8 @@ class LazyFrame:
 
     @classmethod
     def from_parquet(cls, spark: SparkSession, path: str) -> "LazyFrame":
-        return cls(scan(spark, path))
+        df, st = scan_typed(spark, path)
+        return cls(df, None if st is None else _logical(st))
 
     @classmethod
     def from_orc(cls, spark: SparkSession, path: str) -> "LazyFrame":
@@ -142,20 +174,15 @@ class LazyFrame:
     # ------------------------------------------------------------------
     @property
     def columns(self) -> list[str]:
-        return self._df.columns
+        return [n for n, _ in self.logical_schema]
 
     @property
     def logical_schema(self) -> Schema:
         """(name, logical DataType) pairs; superset Spark types map to
         the nearest logical type or NULL placeholder."""
-        out: Schema = []
-        for f in self._df.schema.fields:
-            dt = DataType.from_spark(f.dataType)
-            out.append((f.name, dt if dt is not None else DataType.NULL))
-        return out
-
-    def _logical_schema_for_exprs(self) -> Schema:
-        return self.logical_schema
+        if self._schema is None:
+            self._schema = _logical(self._df.schema)
+        return list(self._schema)
 
     # ------------------------------------------------------------------
     # operators (reference surface)
@@ -164,8 +191,9 @@ class LazyFrame:
         return Expr.col(e) if isinstance(e, str) else e
 
     def select(self, *exprs: "Expr | str") -> "LazyFrame":
-        schema = self._logical_schema_for_exprs()
+        schema = self.logical_schema
         compiled = []
+        out = []
         seen: set[str] = set()
         for e in exprs:
             ex = self._as_expr(e)
@@ -175,19 +203,21 @@ class LazyFrame:
                 raise DuplicateColumnError(name)
             seen.add(name)
             compiled.append(ex.to_spark(schema))
-        return LazyFrame(self._df.select(*compiled))
+            out.append((name, ex.known_type(schema)))
+        known = all(t is not None for _, t in out)
+        return LazyFrame(self._df.select(*compiled), out if known else None)
 
     def filter(self, predicate: Expr) -> "LazyFrame":
-        schema = self._logical_schema_for_exprs()
+        schema = self.logical_schema
         predicate.validate(schema)
         out_t = predicate.output_type(schema)
         if out_t not in (DataType.BOOLEAN, DataType.NULL):
             raise InvalidPredicateError(
                 f"predicate must be Boolean, got {out_t.value}")
-        return LazyFrame(self._df.filter(predicate._compile(schema)))
+        return LazyFrame(self._df.filter(predicate._compile(schema)), schema)
 
     def limit(self, n: int) -> "LazyFrame":
-        return LazyFrame(self._df.limit(n))
+        return LazyFrame(self._df.limit(n), self._schema)
 
     def inner_join(self, other: "LazyFrame", left_key: str, right_key: str,
                    broadcast_right: bool = False) -> "LazyFrame":
@@ -215,14 +245,15 @@ class LazyFrame:
         rks = [right_key] if isinstance(right_key, str) else list(right_key)
         if len(lks) != len(rks):
             raise LengthMismatchError("left and right key lists differ in length")
-        lschema, rschema = dict(self.logical_schema), dict(other.logical_schema)
+        lschema, rschema = self.logical_schema, other.logical_schema
+        ltypes, rtypes = dict(lschema), dict(rschema)
         for lk, rk in zip(lks, rks):
-            if lk not in lschema:
-                raise ColumnNotFoundError(lk, list(lschema))
-            if rk not in rschema:
-                raise ColumnNotFoundError(rk, list(rschema))
-            if not comparable(lschema[lk], rschema[rk]):
-                raise IncompatibleJoinKeysError(lk, lschema[lk].value, rk, rschema[rk].value)
+            if lk not in ltypes:
+                raise ColumnNotFoundError(lk, list(ltypes))
+            if rk not in rtypes:
+                raise ColumnNotFoundError(rk, list(rtypes))
+            if not comparable(ltypes[lk], rtypes[rk]):
+                raise IncompatibleJoinKeysError(lk, ltypes[lk].value, rk, rtypes[rk].value)
 
         l = self._df.alias("__rvl")
         r = other._df.alias("__rvr")
@@ -235,33 +266,42 @@ class LazyFrame:
             cond = c if cond is None else (cond & c)
         joined = l.join(r, cond, how)
         if how in ("semi", "anti"):
-            return LazyFrame(joined)
+            return LazyFrame(joined, lschema)
         # for right-preserving joins an unmatched right row carries its
         # key only in the right key column — emitting the bare left key
         # would null it out (silent data loss), so the output key
-        # coalesces both sides
-        rk_for_lk = dict(zip(lks, rks))
-        out_cols = []
-        for c in self.columns:
-            if how in _RIGHT_PRESERVING and c in rk_for_lk:
-                out_cols.append(
-                    F.coalesce(F.col(f"__rvl.{c}"),
-                               F.col(f"__rvr.{rk_for_lk[c]}")).alias(c))
+        # coalesces both sides. Columns kept under their own name are
+        # projected by name: a Column per name costs JVM round-trips.
+        rk_for_lk = dict(zip(lks, rks)) if how in _RIGHT_PRESERVING else {}
+        out_cols: list[Column | str] = []
+        out: list[tuple[str, DataType | None]] = []
+        for c, t in lschema:
+            if c in rk_for_lk:
+                rk = rk_for_lk[c]
+                out_cols.append(F.coalesce(F.col(f"__rvl.{c}"),
+                                           F.col(f"__rvr.{rk}")).alias(c))
+                t = _coalesced(t, rtypes[rk])
             else:
-                out_cols.append(F.col(f"__rvl.{c}"))
-        for c in other.columns:
+                out_cols.append(f"__rvl.{c}")
+            out.append((c, t))
+        for c, t in rschema:
             if c in rks:
                 continue
-            name = f"{c}_right" if c in self.columns else c
-            out_cols.append(F.col(f"__rvr.{c}").alias(name))
-        return LazyFrame(joined.select(*out_cols))
+            if c in ltypes:
+                out_cols.append(F.col(f"__rvr.{c}").alias(f"{c}_right"))
+                c = f"{c}_right"
+            else:
+                out_cols.append(f"__rvr.{c}")
+            out.append((c, t))
+        known = all(t is not None for _, t in out)
+        return LazyFrame(joined.select(*out_cols), out if known else None)
 
     # ------------------------------------------------------------------
     # operators (Spark-native superset)
     # ------------------------------------------------------------------
     def with_column(self, name: str, expr: "Expr | Column") -> "LazyFrame":
         if isinstance(expr, Expr):
-            schema = self._logical_schema_for_exprs()
+            schema = self.logical_schema
             expr.validate(schema)
             expr = expr._compile(schema)
         return LazyFrame(self._df.withColumn(name, expr))
@@ -276,7 +316,7 @@ class LazyFrame:
         for name, e in exprs.items():
             if isinstance(e, Expr):
                 if schema is None:
-                    schema = self._logical_schema_for_exprs()
+                    schema = self.logical_schema
                 e.validate(schema)
                 e = e._compile(schema)
             compiled[name] = e
@@ -318,7 +358,7 @@ class LazyFrame:
         for c in subset or []:
             if c not in self.columns:
                 raise ColumnNotFoundError(c, self.columns)
-        return LazyFrame(self._df.dropDuplicates(subset))
+        return LazyFrame(self._df.dropDuplicates(subset), self._schema)
 
     def fill_null(self, value: Any, subset: list[str] | None = None) -> "LazyFrame":
         for c in subset or []:
@@ -335,10 +375,10 @@ class LazyFrame:
                 "descending flags")
         order = [F.col(c).desc() if d else F.col(c).asc()
                  for c, d in zip(cols, descending)]
-        return LazyFrame(self._df.orderBy(*order))
+        return LazyFrame(self._df.orderBy(*order), self._schema)
 
     def distinct(self) -> "LazyFrame":
-        return LazyFrame(self._df.distinct())
+        return LazyFrame(self._df.distinct(), self._schema)
 
     def union(self, other: "LazyFrame") -> "LazyFrame":
         return LazyFrame(self._df.unionByName(other._df))

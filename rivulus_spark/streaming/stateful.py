@@ -20,6 +20,7 @@ Operators:
 
 from __future__ import annotations
 
+import warnings
 from typing import Iterator, Tuple
 
 import pandas as pd
@@ -32,6 +33,14 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+#: pandas warns on each concat that PySpark's state serializer makes of
+#: a group's output and its all-NA padding rows. The concat runs in the
+#: Python worker after the state function returns, so the state
+#: functions install this filter there, once per task.
+_CONCAT_NA = ("The behavior of DataFrame concatenation with empty or "
+              "all-NA entries")
+_SERIALIZERS = r"pyspark\.sql\.pandas\.serializers"
 
 
 def streaming_dedup(df: DataFrame, key_col: str = "fp",
@@ -53,9 +62,14 @@ def streaming_dedup(df: DataFrame, key_col: str = "fp",
     state_schema = StructType([StructField("seen", LongType())])
     timeout = (GroupStateTimeout.ProcessingTimeTimeout if ttl
                else GroupStateTimeout.NoTimeout)
+    quiet: list[bool] = []
 
     def fn(key: Tuple[str], pdfs: Iterator[pd.DataFrame],
            state: GroupState) -> Iterator[pd.DataFrame]:
+        if not quiet:
+            warnings.filterwarnings("ignore", _CONCAT_NA, FutureWarning,
+                                    _SERIALIZERS)
+            quiet.append(True)
         if state.hasTimedOut:
             state.remove()
             return
@@ -92,9 +106,14 @@ def running_totals(df: DataFrame, key_col: str = "user_id",
                              StructField("total", DoubleType())])
     state_schema = StructType([StructField("n", LongType()),
                                StructField("total", DoubleType())])
+    quiet: list[bool] = []
 
     def fn(key: Tuple[int], pdfs: Iterator[pd.DataFrame],
            state: GroupState) -> Iterator[pd.DataFrame]:
+        if not quiet:
+            warnings.filterwarnings("ignore", _CONCAT_NA, FutureWarning,
+                                    _SERIALIZERS)
+            quiet.append(True)
         n, total = state.get if state.exists else (0, 0.0)
         for pdf in pdfs:
             n += len(pdf)

@@ -23,12 +23,12 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.tables import EVENTS_SCHEMA
+from ..sources.tables import EVENTS_SCHEMA, read_events
 
 
 def load_events(spark: SparkSession, path: str) -> DataFrame:
     """Batch read of an events parquet path, typed by ``EVENTS_SCHEMA``."""
-    return spark.read.schema(EVENTS_SCHEMA).parquet(path)
+    return read_events(spark, path)
 
 
 def read_event_stream(spark: SparkSession, path: str) -> DataFrame:

@@ -820,7 +820,7 @@ def q_stream_running_totals(spark, sf_dir):
         stateful.running_totals(stream, "user_id", "value"),
         output_mode="update",
         state_partitions=_stream_state_partitions(
-            f"{sf_dir}/events.parquet", 4))
+            spark, f"{sf_dir}/events.parquet", 4))
     return (out.groupBy("user_id")
             .agg(F.max("n").alias("n"),
                  F.round(F.max_by("total", "n"), 2).alias("total")))
@@ -880,7 +880,7 @@ def q_stream_sessionize(spark, sf_dir):
     out = sw.run_available_now(
         sessions, output_mode="complete",
         state_partitions=_stream_state_partitions(
-            f"{sf_dir}/events.parquet", 8, rows_per_part=20_000))
+            spark, f"{sf_dir}/events.parquet", 8, rows_per_part=20_000))
     return (out.groupBy("user_id")
             .agg(F.count("*").cast("long").alias("n_sessions")))
 
@@ -905,12 +905,12 @@ def q_stream_events_hourly(spark, sf_dir):
         aggs=[F.count("*").alias("n_events"),
               F.round(F.sum("value"), 2).alias("sum_value")],
         keys=["event_type"], watermark="2 hours")
-    # 8 state partitions cover the sf0.1 windowed keyspace at a
-    # quarter of the default checkpoint fan-out, growing with volume
+    # base 8 state instances (capped at the task slots) cover the
+    # sf0.1 windowed keyspace, growing with volume
     out = sw.run_available_now(
         agg, output_mode="complete",
         state_partitions=_stream_state_partitions(
-            f"{sf_dir}/events.parquet", 8, rows_per_part=20_000))
+            spark, f"{sf_dir}/events.parquet", 8, rows_per_part=20_000))
     return out.select(
         F.date_format("window_start", "yyyy-MM-dd HH:00").alias("hour"),
         "event_type", "n_events", "sum_value")
@@ -949,7 +949,7 @@ def q_stream_interval_join(spark, sf_dir):
     out = sw.run_available_now(
         j, output_mode="append",
         state_partitions=_stream_state_partitions(
-            f"{sf_dir}/events.parquet", 8, rows_per_part=20_000))
+            spark, f"{sf_dir}/events.parquet", 8, rows_per_part=20_000))
     return (out.groupBy("event_id", "user_id")
             .agg(F.count("*").alias("n_views"),
                  F.round(F.sum("value_r"), 2).alias("sum_view_value")))
@@ -977,7 +977,7 @@ def q_stream_dedup(spark, sf_dir):
     out = sw.run_available_now(
         stateful.streaming_dedup(stream), output_mode="append",
         state_partitions=_stream_state_partitions(
-            f"{sf_dir}/documents.parquet", 8))
+            spark, f"{sf_dir}/documents.parquet", 8))
     return out.select("fp")
 
 
@@ -1018,7 +1018,7 @@ def q_stream_dedup_watermark(spark, sf_dir):
             ts_col="ts", watermark="2 hours"),
         output_mode="append",
         state_partitions=_stream_state_partitions(
-            f"{sf_dir}/events.parquet", 8, rows_per_part=20_000))
+            spark, f"{sf_dir}/events.parquet", 8, rows_per_part=20_000))
     return out.select("user_id", "event_type", "hour")
 
 
@@ -2041,43 +2041,32 @@ _PII_SUFFIX_SQL = ("' contact user' || doc_id || '@example.com from 10.0.' "
                    "|| (doc_id % 200) || '.7 ssn 123-45-6789 tel 555-867-5309'")
 
 
-def _stream_state_partitions(source: str, base: int,
+def _stream_state_partitions(spark: SparkSession, source: str, base: int,
                              rows_per_part: int = 2_000) -> int:
-    """State-store instance count sized to the input ROW count: one
-    partition per ``rows_per_part`` rows, clamped to [base, 32]. The
-    count is FIXED at stream start from shuffle.partitions, so it must
-    be chosen per-source — a constant that is right at sf0.1 starves
-    the Python state sweep at sf10 (32 cores idle behind 4
-    partitions), while an unconditionally large count pays checkpoint
-    fan-out on tiny inputs (VERDICT r4 item 5).
+    """State-store instance count for a stream over ``source``: one
+    instance per ``rows_per_part`` input rows, at least ``base`` and at
+    most 32, and never more than the session's task slots
+    (``defaultParallelism``). The count is fixed from
+    ``spark.sql.shuffle.partitions`` when the stream starts, so it is
+    chosen per source.
 
-    Rows, not bytes (r8): the dominant stateful cost for the
-    applyInPandasWithState queries is the PER-GROUP Python
-    invocation, which tracks key count — the r8 stage probe measured
-    the state sweep at 13.4s of stream_dedup's 14.2s sf1 drain while
-    fixed machinery (an identical no-state drain) was 0.5s. The old
-    2 MB-of-compressed-bytes rule left heavily-compressed text at 8
-    partitions for 50k state keys (24 cores idle); per-row sizing
-    raised it to 25 and cut the sf1 drain 14.2 -> 5.5s (2.6x, same
-    output).
-
-    ``rows_per_part`` is the Python/JVM split (r8 bench follow-up):
-    the 2k default suits Python-swept state, but JVM state stores
-    (dropDuplicatesWithinWatermark, stream-stream joins, windowed
-    aggs) have no per-group Python cost — their small-scale term is
-    per-partition checkpoint commits, and the dense default measured
-    stream_interval_join 2.7 -> 8.6s at sf0.1 (32 state partitions
-    for a 150k-row input). Those callers pass rows_per_part=20_000,
-    which restores base at sf0.1 and still reaches 32 by sf1. On a
-    real cluster both tiers would key on executor slots instead of
-    local cores."""
+    - Rows, not bytes: the cost of the ``applyInPandasWithState``
+      queries is one Python call per state key, which tracks the row
+      count, so the 2k default gives a larger input more instances.
+    - JVM state stores (``dropDuplicatesWithinWatermark``,
+      stream-stream joins, windowed aggregations) have no per-key
+      Python cost; their cost on small inputs is the per-instance
+      checkpoint commit. Their callers pass ``rows_per_part=20_000``.
+    - Every instance commits its own delta, checkpoint-checksum and
+      ``.crc`` files per micro-batch, and instances beyond the task
+      slots only queue, so the slots cap the count. On a cluster that
+      is the executors' total cores."""
     try:
         rows = _parquet_rows(source, 0)
     except Exception:
         rows = 0
-    if rows <= 0:
-        return base
-    return max(base, min(32, rows // rows_per_part))
+    wanted = base if rows <= 0 else max(base, min(32, rows // rows_per_part))
+    return min(wanted, spark.sparkContext.defaultParallelism)
 
 
 def _stream_file_plan(source: str, base_files: int = 4) -> tuple[int, int]:

@@ -4,6 +4,8 @@ queries), rewritten against the PySpark-native engine."""
 
 from __future__ import annotations
 
+import datetime
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -19,6 +21,7 @@ from rivulus_spark import (
     col,
     lit,
 )
+from rivulus_spark.expressions.expr import Expr, Op
 
 
 def rows_as_tuples(rows):
@@ -361,3 +364,93 @@ class TestFacadeMethods:
         out = LazyFrame.from_spark(df).fill_null(0, subset=["a"]).collect()
         got = sorted([(r.a, r.b) for r in out], key=repr)
         assert got == sorted([(0, 2.0), (1, None)], key=repr)
+
+
+def jvm_schema(lf):
+    """The logical schema of ``lf`` as read from the JVM."""
+    return [(f.name, DataType.from_spark(f.dataType) or DataType.NULL)
+            for f in lf.to_spark().schema.fields]
+
+
+def assert_carries_jvm_schema(lf):
+    assert lf._schema is not None, "schema is not carried"
+    assert lf._schema == jvm_schema(lf)
+
+
+def _operands(op):
+    """Operand pairs per op, over the ``nums`` columns."""
+    if op in (Op.AND, Op.OR):
+        return [(col("b"), col("b")), (col("b"), lit(True)),
+                (col("i") > 1, col("x") < 0.0)]
+    pairs = [(col("i"), col("j")), (col("i"), col("x")),
+             (col("x"), col("i")), (col("x"), col("x")),
+             (col("i"), lit(2)), (col("x"), lit(2)), (col("i"), lit(2.5)),
+             (lit(3), col("j")), (col("i") * col("j"), col("x"))]
+    if op in (Op.ADD, Op.SUB, Op.MUL, Op.DIV):
+        return pairs
+    return pairs + [(col("s"), col("s")), (col("s"), lit("a")),
+                    (col("b"), lit(False))]
+
+
+class TestCarriedSchema:
+    """The logical schema a LazyFrame carries equals the one Spark
+    derives for the same plan."""
+
+    @pytest.fixture()
+    def nums(self, spark):
+        return LazyFrame.from_dataframe(spark, {
+            "i": [1, 2, None], "j": [3, 0, 5], "x": [1.5, None, -2.0],
+            "b": [True, False, None], "s": ["a", "b", None],
+            "n": [None, None, None]})
+
+    @pytest.mark.parametrize("op", list(Op), ids=lambda op: op.name)
+    def test_select_over_each_op(self, nums, op):
+        exprs = [Expr(kind="binary", left=l, op=op, right=r).alias(f"e{k}")
+                 for k, (l, r) in enumerate(_operands(op))]
+        assert_carries_jvm_schema(nums.select("i", *exprs))
+
+    def test_select_columns_literals_and_aliases(self, nums):
+        out = nums.select("s", col("x").alias("y"), lit(1), "n",
+                          lit("t").alias("t"), lit(None).alias("z"),
+                          (col("i") + col("j")))
+        assert out.columns == ["s", "y", "literal", "n", "t", "z", "i"]
+        assert_carries_jvm_schema(out)
+
+    @pytest.mark.parametrize("expr", [
+        col("s") + lit(1), col("n") * col("i"), lit(None) + col("x"),
+        lit(datetime.date(2020, 1, 1))])
+    def test_select_spark_coerces_reads_jvm_schema(self, nums, expr):
+        out = nums.select(expr.alias("e"))
+        assert out._schema is None
+        assert out.logical_schema == jvm_schema(out)
+
+    def test_row_operators_pass_schema_through(self, nums):
+        out = (nums.filter(col("i") > 0).limit(2).sort("x").distinct()
+               .drop_duplicates(["s"]))
+        assert_carries_jvm_schema(out)
+
+    def test_parquet_source_carries_its_read_schema(self, spark):
+        import os
+
+        from rivulus_spark.workload import DRIVER_SF_DIR
+
+        for f in sorted(os.listdir(DRIVER_SF_DIR)):
+            if f.endswith(".parquet"):
+                assert_carries_jvm_schema(
+                    LazyFrame.from_parquet(spark, f"{DRIVER_SF_DIR}/{f}"))
+
+    @pytest.mark.parametrize("how", [
+        "inner", "left", "right", "outer", "full", "semi", "anti"])
+    def test_join_schema(self, spark, users, orders, how):
+        # int key against int key; collisions: the keys' own names
+        assert_carries_jvm_schema(
+            users.join(orders, "user_id", "user_id", how=how))
+        # int key against float key (right-preserving joins coalesce to
+        # Float64); ``name`` and ``city`` collide and take ``_right``
+        tags = LazyFrame.from_dataframe(spark, {
+            "uid": [1.0, 2.0, 7.0], "name": ["x", "y", "z"],
+            "city": ["p", "q", "r"], "city_right": ["u", "v", "w"]})
+        assert_carries_jvm_schema(users.join(tags, "user_id", "uid", how=how))
+        assert_carries_jvm_schema(users.join(
+            tags, ["user_id", "name"], ["uid", "name"], how=how,
+            broadcast_right=True, null_safe=True))

@@ -879,3 +879,26 @@ def test_steady_relational_pass_compiles_no_classes(spark):
 
     assert run_pass() > 0
     assert run_pass() == 0
+
+
+def test_relational_builds_stay_under_round_trip_budget(spark, monkeypatch):
+    """Building the relational mix warm talks to the JVM at most 2,500
+    times (3,618 before scans were reused per session, expressions
+    built one Column per node and the LazyFrame carried its schema;
+    about 1,960 after). The count is exact, so a build regression
+    fails here without any timing."""
+    from py4j.clientserver import JavaClient
+
+    from perfbench.workloads import WORKLOADS
+
+    names = WORKLOADS["relational"]
+    for name in names:
+        QUERIES[name](spark, SF)
+    sent = []
+    send = JavaClient.send_command
+    monkeypatch.setattr(JavaClient, "send_command",
+                        lambda self, *a, **k: sent.append(1) or send(self, *a, **k))
+    for name in names:
+        QUERIES[name](spark, SF)
+    monkeypatch.undo()
+    assert 0 < len(sent) <= 2_500, len(sent)

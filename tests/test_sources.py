@@ -372,3 +372,92 @@ class TestScan:
             QUERIES[name](spark, DRIVER_SF_DIR)
             assert dag.numTotalJobs() == jobs_before, \
                 f"building {name} ran a Spark job"
+
+
+def _count_readers(monkeypatch, spark) -> list:
+    """Record every ``spark.read`` of this session's class from now on."""
+    made: list = []
+    cls = type(spark)
+    read = cls.read
+    monkeypatch.setattr(cls, "read", property(
+        lambda s: made.append(s) or read.fget(s)))
+    return made
+
+
+class TestScanReuse:
+    """A footer-typed file is resolved once per session and file
+    version; every ``scan`` still returns an independent relation."""
+
+    def test_unchanged_file_builds_no_new_reader(self, spark, tmp_path,
+                                                 monkeypatch):
+        path = _arrow_file(tmp_path, "t", k=pa.array([1, 2, 3]))
+        first = scan(spark, path)
+        readers = _count_readers(monkeypatch, spark)
+        again = scan(spark, path)
+        assert readers == []
+        assert again.schema == first.schema
+        assert again.collect() == first.collect()
+
+    def test_rewritten_file_is_read_anew(self, spark, tmp_path):
+        path = _arrow_file(tmp_path, "t", k=pa.array([1, 2, 3]))
+
+        def read():
+            df = scan(spark, path)
+            return df.columns, sorted(map(tuple, df.collect()))
+
+        assert read() == (["k"], [(1,), (2,), (3,)])
+        pq.write_table(pa.table({"k": pa.array([4, 5]),
+                                 "w": pa.array(["a", "b"])}), path)
+        assert read() == (["k", "w"], [(4, "a"), (5, "b")])
+        # same size: only the modification time tells the versions apart
+        before = os.stat(path)
+        pq.write_table(pa.table({"j": pa.array([4, 5]),
+                                 "w": pa.array(["a", "b"])}), path)
+        assert os.stat(path).st_size == before.st_size
+        os.utime(path, ns=(before.st_atime_ns, before.st_mtime_ns + 10**9))
+        assert read() == (["j", "w"], [(4, "a"), (5, "b")])
+
+    def test_new_session_never_gets_an_old_relation(self, spark, tmp_path):
+        path = _arrow_file(tmp_path, "t", k=pa.array([1, 2, 3]))
+
+        def resolved_in(df):
+            return df._jdf.queryExecution().analyzed().relation() \
+                .sparkSession()
+
+        assert resolved_in(scan(spark, path)).equals(spark._jsparkSession)
+        other = spark.newSession()
+        for _ in range(2):
+            df = scan(other, path)
+            assert df.sparkSession is other
+            assert resolved_in(df).equals(other._jsparkSession)
+        assert resolved_in(scan(spark, path)).equals(spark._jsparkSession)
+
+    def test_self_join_matches_independent_reads(self, spark, tmp_path):
+        path = _arrow_file(tmp_path, "t", k=pa.array([1, 2, 2, None]),
+                           v=pa.array(["a", "b", "c", "d"]))
+
+        def joined(a, b):
+            out = a.join(b, a.k == b.k)
+            return (sorted(map(tuple, out.collect())),
+                    sorted(map(tuple, out.select(a.v, b.v).collect())))
+
+        def attributes(df):
+            return str(df._jdf.queryExecution().analyzed().output())
+
+        a, b, c = scan(spark, path), scan(spark, path), scan(spark, path)
+        assert len({attributes(a), attributes(b), attributes(c)}) == 3
+        want = joined(spark.read.parquet(path), spark.read.parquet(path))
+        assert len(want[0]) == 5
+        assert joined(a, b) == want
+        assert joined(b, c) == want
+
+    def test_fixed_schema_and_footer_reads_do_not_mix(self, spark):
+        from rivulus_spark.sources.tables import EVENTS_SCHEMA, load_table
+
+        path = f"{DRIVER_SF_DIR}/events.parquet"
+        footer = spark.read.parquet(path).schema
+        assert footer != EVENTS_SCHEMA
+        for _ in range(2):
+            assert scan(spark, path).schema == footer
+            assert load_table(spark, DRIVER_SF_DIR, "events").schema \
+                == EVENTS_SCHEMA

@@ -537,3 +537,12 @@ def test_stream_weighted_sample_equals_batch(spark):
     want = [(r.doc_id, r.skey, r.rank) for r in
             QUERIES["weighted_sample_tokens"](spark, sf).collect()]
     assert sorted(got) == sorted(want) and len(got) == 100
+
+
+def test_state_instances_never_exceed_task_slots(spark):
+    from rivulus_spark.workload import _stream_state_partitions
+
+    slots = spark.sparkContext.defaultParallelism
+    assert _stream_state_partitions(spark, EVENTS, slots + 8) == slots
+    assert _stream_state_partitions(spark, EVENTS, 1, rows_per_part=1) \
+        == min(32, slots)
