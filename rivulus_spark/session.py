@@ -6,6 +6,8 @@ runtime re-planning (skew joins, partition coalescing), Arrow for any
 pandas-UDF boundary, and a UTC session timezone so timestamp semantics
 are deterministic across engines. The codegen cache holds 2000 classes,
 so a repeated workload reuses its generated code instead of recompiling.
+Local sessions commit streaming checkpoint files through Hadoop's
+``FileSystem`` API, whose local rename forks no ``readlink`` process.
 """
 
 from __future__ import annotations
@@ -59,5 +61,15 @@ def get_spark(app_name: str = "rivulus-spark") -> SparkSession:
         # the driver's tail-capture they can crowd out the one JSON line
         # bench.py prints, so keep them off everywhere
         .config("spark.ui.showConsoleProgress", "false")
+        # Spark's default checkpoint manager renames through
+        # FileContext, which on a local path without libhadoop stats
+        # each file and its .crc via a forked `readlink` (8 forks per
+        # offset, commit or state file). The FileSystem manager does the
+        # same exists-then-rename (File.renameTo), so fail-if-exists
+        # and exactly-once hold. configure() keeps the default: on HDFS
+        # the FileContext rename is atomic.
+        .config("spark.sql.streaming.checkpointFileManagerClass",
+                "org.apache.spark.sql.execution.streaming.checkpointing."
+                "FileSystemBasedCheckpointFileManager")
     )
     return configure(builder).getOrCreate()

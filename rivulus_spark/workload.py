@@ -2070,20 +2070,14 @@ def _stream_state_partitions(spark: SparkSession, source: str, base: int,
 
 
 def _stream_file_plan(source: str, base_files: int = 4) -> tuple[int, int]:
-    """(n_staged_files, files_per_trigger) sized to the source volume
-    — the staging half of the r4 sizing item (_stream_state_partitions
-    is the state-store half). A fixed 4-files/2-per-trigger plan is
-    right at sf0.1 but caps file-level read parallelism at 2 files per
-    micro-batch forever: at sf10 that's two ~100 MB single-file reads
-    feeding 32 cores. Scale the staged file count with compressed
-    volume (~4 MB per file, capped at 64, rounded UP to even — odd n
-    with per_trigger = n // 2 would leave a third one-file
-    micro-batch, breaking the two-batch invariant below) and keep
-    files_per_trigger = half the files, so the run is always exactly
-    TWO micro-batches — state still crosses a batch boundary (the
-    semantics the streaming queries exercise) while per-batch
-    parallelism grows with the data. At sf0.1 this resolves to the
-    historical 4/2."""
+    """(n_staged_files, files_per_trigger) for a file-stream replay of
+    ``source``: one staged file per ~4 MB of compressed source, at
+    least ``base_files`` and at most 64, rounded up to an even count,
+    with ``files_per_trigger`` half of that. The replay therefore
+    drains in exactly two micro-batches, so state crosses one batch
+    boundary, while read parallelism per batch grows with the data.
+    :func:`_stream_state_partitions` sizes the state-store side. An
+    unreadable ``source`` gets ``base_files`` files."""
     import os
 
     try:
@@ -2098,13 +2092,15 @@ def _stream_file_plan(source: str, base_files: int = 4) -> tuple[int, int]:
 def _staged_stream_parquet(df: DataFrame, source: str, tag: str,
                            n_files: int,
                            range_col: str | None = None) -> str:
-    """Stage ``df`` as a small multi-file parquet dir for file-stream
-    replay (a per-trigger file cap needs several files), ONCE per source
-    content: the dir name is keyed on the source path + mtime + size,
-    and a completed write (``_SUCCESS``) is reused. Re-running a
-    streaming query must not re-pay the staging write — it was ~2s of
-    the 5.8s round-3 ``stream_running_totals`` timing (r3 perf
-    finding); the write is harness setup, not engine throughput."""
+    """Stage ``df`` as a multi-file parquet dir of ``n_files`` files
+    for file-stream replay (a per-trigger file cap needs several
+    files) and return its path. The dir lives under the temp dir,
+    keyed on ``tag``, ``n_files``, ``range_col``, the source's path,
+    mtime and size, and the analyzed plan of ``df``; a dir with a
+    ``_SUCCESS`` marker is reused as is, so a rerun of a streaming
+    query does not pay the staging write. With ``range_col`` the files
+    are range-partitioned on it and stamped with increasing mtimes, so
+    the replay order is time order."""
     import hashlib
     import os
     import re as _re

@@ -886,7 +886,12 @@ def test_relational_builds_stay_under_round_trip_budget(spark, monkeypatch):
     times (3,618 before scans were reused per session, expressions
     built one Column per node and the LazyFrame carried its schema;
     about 1,960 after). The count is exact, so a build regression
-    fails here without any timing."""
+    fails here without any timing. Only the building thread's commands
+    count: py4j's finalizer thread sends object deletions
+    asynchronously, and how many of them land in the window depends on
+    garbage left by earlier tests."""
+    import threading
+
     from py4j.clientserver import JavaClient
 
     from perfbench.workloads import WORKLOADS
@@ -896,8 +901,14 @@ def test_relational_builds_stay_under_round_trip_budget(spark, monkeypatch):
         QUERIES[name](spark, SF)
     sent = []
     send = JavaClient.send_command
-    monkeypatch.setattr(JavaClient, "send_command",
-                        lambda self, *a, **k: sent.append(1) or send(self, *a, **k))
+    builder = threading.get_ident()
+
+    def counted(self, *a, **k):
+        if threading.get_ident() == builder:
+            sent.append(1)
+        return send(self, *a, **k)
+
+    monkeypatch.setattr(JavaClient, "send_command", counted)
     for name in names:
         QUERIES[name](spark, SF)
     monkeypatch.undo()

@@ -139,12 +139,10 @@ def test_session_append_emits_watermark_closed_only(spark, tmp_path):
 
 
 def test_stream_file_plan_two_batch_invariant(tmp_path):
-    """Staging plan contract (ADVICE r6 + VERDICT item 5): the staged
-    file count is even so per_trigger = n // 2 yields EXACTLY two
-    micro-batches (odd n used to leave a third one-file batch), and
-    the sf0.1 sources still resolve to the historical 4 files / 2 per
-    trigger — the r6 streaming bench deltas were host spread, not a
-    staging fan-out change."""
+    """The staged file count is even and files_per_trigger is half of
+    it, so every replay drains in exactly two micro-batches (an odd
+    count would leave a third one-file batch); the sf0.1 sources
+    resolve to 4 files, 2 per trigger."""
     import math
     import os
 
@@ -413,6 +411,69 @@ def test_file_sink_drain_is_exactly_once_on_resume(spark, tmp_path):
         .write.parquet(str(src / "f2"))
     n2 = drain().count()
     assert n2 == len([i for i in range(150) if i % 7 < 5])
+
+
+def _checkpoint_manager(spark, path):
+    """The CheckpointFileManager this session's streams use for
+    ``path``."""
+    jvm = spark._jvm
+    return (jvm.org.apache.spark.sql.execution.streaming.checkpointing
+            .CheckpointFileManager.create(
+                jvm.org.apache.hadoop.fs.Path(path),
+                spark._jsparkSession.sessionState().newHadoopConf()))
+
+
+def test_local_drain_spawns_no_readlink(spark, event_dir, tmp_path):
+    """A windowed drain commits its offset, commit, metadata and state
+    files without forking a process per file stat: the session's
+    checkpoint manager is the FileSystem-based one, and a JFR
+    recording of ``jdk.ProcessStart`` in the driver JVM over one drain
+    sees no ``readlink``. (Spark's FileContext manager forks eight per
+    committed file on a host without libhadoop.)"""
+    import collections
+    import os
+
+    assert _checkpoint_manager(spark, str(tmp_path)).getClass() \
+        .getSimpleName() == "FileSystemBasedCheckpointFileManager"
+
+    stream = tumbling_agg(read_event_stream(spark, event_dir), "ts",
+                          "1 hour", [F.count("*").alias("n")],
+                          keys=["event_type"], watermark="30 minutes")
+    jvm = spark._jvm
+    rec = jvm.jdk.jfr.Recording()
+    try:
+        rec.enable("jdk.ProcessStart")
+        rec.start()
+        got = run_available_now(stream)
+        rec.stop()
+        dump = jvm.java.io.File(str(tmp_path / "drain.jfr")).toPath()
+        rec.dump(dump)
+    finally:
+        rec.close()
+    spawned = collections.Counter(
+        os.path.basename(e.getString("command").split()[0])
+        for e in jvm.jdk.jfr.consumer.RecordingFile.readAllEvents(dump))
+    assert got.count() > 0
+    assert spawned["readlink"] == 0, dict(spawned)
+
+
+def test_checkpoint_create_atomic_fails_if_exists(spark, tmp_path):
+    """The fail-if-exists commit that HDFSMetadataLog relies on for
+    exactly-once batches: a second ``createAtomic(p, False)`` on an
+    existing file raises on close and the file keeps its first
+    content."""
+    from py4j.protocol import Py4JJavaError
+
+    fm = _checkpoint_manager(spark, str(tmp_path))
+    path = spark._jvm.org.apache.hadoop.fs.Path(str(tmp_path / "0"))
+    first = fm.createAtomic(path, False)
+    first.write(b"first")
+    first.close()
+    second = fm.createAtomic(path, False)
+    second.write(b"second")
+    with pytest.raises(Py4JJavaError, match="FileAlreadyExists"):
+        second.close()
+    assert (tmp_path / "0").read_bytes() == b"first"
 
 
 def test_stream_decontaminate_matches_batch_report(spark, tmp_path):
