@@ -46,9 +46,12 @@ def configure(builder: SparkSession.Builder) -> SparkSession.Builder:
     )
 
 
-def get_spark(app_name: str = "rivulus-spark") -> SparkSession:
+def local_builder(app_name: str = "rivulus-spark") -> SparkSession.Builder:
+    """The ``local[$SPARK_GRAFT_CPUS]`` builder before ``configure``:
+    driver heap, no UI or progress bars, and the local checkpoint
+    manager. Callers may add confs on top (later ``config`` calls win)."""
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
-    builder = (
+    return (
         SparkSession.builder
         .master(f"local[{cpus}]")
         .appName(app_name)
@@ -72,4 +75,7 @@ def get_spark(app_name: str = "rivulus-spark") -> SparkSession:
                 "org.apache.spark.sql.execution.streaming.checkpointing."
                 "FileSystemBasedCheckpointFileManager")
     )
-    return configure(builder).getOrCreate()
+
+
+def get_spark(app_name: str = "rivulus-spark") -> SparkSession:
+    return configure(local_builder(app_name)).getOrCreate()

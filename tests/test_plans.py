@@ -885,31 +885,44 @@ def test_relational_builds_stay_under_round_trip_budget(spark, monkeypatch):
     """Building the relational mix warm talks to the JVM at most 2,500
     times (3,618 before scans were reused per session, expressions
     built one Column per node and the LazyFrame carried its schema;
-    about 1,960 after). The count is exact, so a build regression
-    fails here without any timing. Only the building thread's commands
-    count: py4j's finalizer thread sends object deletions
-    asynchronously, and how many of them land in the window depends on
-    garbage left by earlier tests."""
+    about 1,960 after, plus about 490 deletions of the objects the
+    build leaves behind). The count is exact, so a build regression
+    fails here without any timing. py4j's finalizer thread sends object
+    deletions asynchronously, so the window opens after garbage from
+    earlier tests has been collected and sent, and closes after the
+    build's own garbage has been; every thread's commands count."""
+    import gc
     import threading
 
     from py4j.clientserver import JavaClient
 
     from perfbench.workloads import WORKLOADS
 
+    client = spark.sparkContext._gateway._gateway_client
+
+    def settle():
+        # the finalizer thread sends queued deletions in order, so once
+        # it reaches this marker every deletion queued before it is sent
+        done = threading.Event()
+
+        class Marker:
+            def garbage_collect_object(self, target_id, enqueue=True):
+                done.set()
+
+        gc.collect()
+        client.finalizer_deque.appendleft((Marker(), None))
+        assert done.wait(60)
+
     names = WORKLOADS["relational"]
     for name in names:
         QUERIES[name](spark, SF)
+    settle()
     sent = []
     send = JavaClient.send_command
-    builder = threading.get_ident()
-
-    def counted(self, *a, **k):
-        if threading.get_ident() == builder:
-            sent.append(1)
-        return send(self, *a, **k)
-
-    monkeypatch.setattr(JavaClient, "send_command", counted)
+    monkeypatch.setattr(JavaClient, "send_command",
+                        lambda self, *a, **k: sent.append(1) or send(self, *a, **k))
     for name in names:
         QUERIES[name](spark, SF)
+    settle()
     monkeypatch.undo()
     assert 0 < len(sent) <= 2_500, len(sent)

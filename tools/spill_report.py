@@ -13,9 +13,10 @@ must not carry for 188 queries x N reps.
 Metrics source: the app's own UI REST API (/api/v1/.../stages), the
 documented public surface for StageData.memoryBytesSpilled /
 diskBytesSpilled / peakExecutionMemory. The engine session normally
-runs with the UI off (session.py); this tool builds its own session
-with the same engine configs (session.configure) plus the UI enabled,
-so measured plans are identical to bench plans.
+runs with the UI off (session.py); this tool builds on the same local
+builder and engine configs (session.local_builder, session.configure)
+with the UI turned on, so measured plans and checkpoint commits are
+identical to bench's.
 
 Usage:
   SPARK_GRAFT_SF_DIR=var/sf1 python tools/spill_report.py \
@@ -77,19 +78,11 @@ def main() -> None:
     ap.add_argument("--port", type=int, default=4050)
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
-
     from rivulus_spark import cache, session
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
-    builder = (SparkSession.builder
-               .master(f"local[{cpus}]")
-               .appName("rivulus-spill-report")
-               .config("spark.driver.memory",
-                       os.environ.get("RIVULUS_DRIVER_MEM", "48g"))
+    builder = (session.local_builder("rivulus-spill-report")
                .config("spark.ui.enabled", "true")
                .config("spark.ui.port", str(args.port))
-               .config("spark.ui.showConsoleProgress", "false")
                # keep every stage of the heaviest query resident so the
                # per-query delta is never broken by UI eviction
                .config("spark.ui.retainedStages", "20000"))
@@ -128,7 +121,7 @@ def main() -> None:
             out = json.load(f)
     key = os.path.basename(os.path.normpath(args.sf_dir))
     out[key] = {"sf_dir": args.sf_dir,
-                "cpus": cpus,
+                "cpus": os.environ.get("SPARK_GRAFT_CPUS", "*"),
                 "queries": report}
     with open(args.out, "w") as f:
         json.dump(out, f, indent=1, sort_keys=True)
